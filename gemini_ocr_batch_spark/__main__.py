@@ -7,9 +7,6 @@ or plain ``python -m gemini_ocr_batch_spark`` in local mode.
 Verbs:
   run       [--config cfg.yaml] --pages <parquet> --out <dir>
             [--max-retries N] [--partitions N]
-            (flags override config; $SPARK_GRAFT_CONFIG names a default
-             config file; .env is loaded with setdefault semantics —
-             reference: src/config.py:161-170, src/env.py:24-41)
   gen       --out <pages.parquet> --rows N [--seed S]   (synthetic input)
   curate    --extracted <run out dir> --out <dir>
             [--min-quality Q] [--max-rep R]
@@ -29,7 +26,15 @@ Verbs:
             (the whole chain from one config: extract → curate →
              decontaminate (if decontam.* set) → shard (if sharding.out
              set); identical artifacts to the standalone verbs,
-             resumable via the extraction checkpoint)
+             resumable via the extraction checkpoint. Shards are cut
+             from curated_out/corpus and are NOT filtered by
+             decontam.flags_out: the flags table is an output for the
+             trainer to anti-join, not a filter on the shards)
+
+The config-reading verbs (run, curate, decontaminate, status, pipeline)
+resolve every setting with one rule, documented in
+:mod:`gemini_ocr_batch_spark.config`: CLI flag > config file > dataclass
+default.
 """
 
 from __future__ import annotations
@@ -37,6 +42,45 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+from gemini_ocr_batch_spark.config import (
+    AppConfig,
+    ConfigError,
+    PathsConfig,
+    load_config,
+    load_dotenv,
+    resolve_config_path,
+)
+
+
+def _load_cfg(cli_path: str | None) -> AppConfig:
+    """The one config source of every config-reading verb: ``.env``
+    (setdefault), then ``--config`` or ``$SPARK_GRAFT_CONFIG``, else the
+    dataclass defaults — never None. ConfigError propagates to ``main``."""
+    load_dotenv(".env")
+    path = resolve_config_path(cli_path)
+    return load_config(path) if path else AppConfig(paths=PathsConfig("", ""))
+
+
+def _pick(flag, cfg_value):
+    """A flag wins when it was given (not None); else the config value."""
+    return cfg_value if flag is None else flag
+
+
+def _missing(hint: str, *named: tuple[str, str | None]) -> bool:
+    """Print the usage error for unset paths; True when any is unset."""
+    missing = [name for name, value in named if not value]
+    if missing:
+        print(f"missing {' and '.join(missing)} (flag or config {hint})",
+              file=sys.stderr)
+    return bool(missing)
+
+
+def _cfg_spark(cfg: AppConfig, master_flag: str | None):
+    from gemini_ocr_batch_spark.session import get_spark
+
+    return get_spark(master=_pick(master_flag, cfg.spark.master),
+                     shuffle_partitions=cfg.spark.shuffle_partitions)
 
 
 def _shard_job(spark, in_path: str, out_dir: str, n_shards: int,
@@ -108,10 +152,9 @@ def _extract_stage(spark, pages_path: str, out_dir: str, input_format: str,
         pages = warc_to_pages(read_warc(spark, pages_path))
     else:
         pages = spark.read.parquet(pages_path)
-    if filters is not None:
-        pages = apply_input_filters(pages, filters)
+    pages = apply_input_filters(pages, filters)
     store = None
-    if checkpoint_cfg is not None and checkpoint_cfg.backend == "iceberg":
+    if checkpoint_cfg.backend == "iceberg":
         from gemini_ocr_batch_spark.checkpoint import IcebergCheckpointStore
 
         store = IcebergCheckpointStore(
@@ -124,7 +167,7 @@ def _extract_stage(spark, pages_path: str, out_dir: str, input_format: str,
         max_retries=max_retries,
         n_partitions=partitions,
         track_inflight=track_inflight,
-        n_buckets=checkpoint_cfg.n_buckets if checkpoint_cfg else 16,
+        n_buckets=checkpoint_cfg.n_buckets,
         store=store,
     )
 
@@ -407,7 +450,9 @@ def main(argv: list[str] | None = None) -> int:
         help="run the full config-driven corpus pipeline: extract → "
              "curate → decontaminate (if decontam.* configured) → shard "
              "(if sharding.out configured) — identical artifacts to "
-             "running the standalone verbs in that order",
+             "running the standalone verbs in that order; shards are cut "
+             "from curated_out/corpus and are NOT filtered by "
+             "decontam.flags_out",
     )
     pl_p.add_argument("--config", required=True,
                       help="the one YAML driving every stage (paths, "
@@ -424,6 +469,12 @@ def main(argv: list[str] | None = None) -> int:
     st_p.add_argument("--master", default=None)
 
     args = p.parse_args(argv)
+    if "config" in args:  # run, curate, decontaminate, pipeline, status
+        try:
+            cfg = _load_cfg(args.config)
+        except ConfigError as exc:
+            print(str(exc), file=sys.stderr)
+            return 2
 
     if args.verb == "gen":
         from gemini_ocr_batch_spark.datagen import (
@@ -445,56 +496,22 @@ def main(argv: list[str] | None = None) -> int:
     from gemini_ocr_batch_spark.session import get_spark
 
     if args.verb == "run":
-        from gemini_ocr_batch_spark.config import (
-            ConfigError,
-            load_config,
-            load_dotenv,
-            resolve_config_path,
-        )
-
-        load_dotenv(".env")  # setdefault semantics: env beats .env
-        cfg = None
-        cfg_path = resolve_config_path(args.config)
-        if cfg_path:
-            try:
-                cfg = load_config(cfg_path)
-            except ConfigError as exc:
-                print(str(exc), file=sys.stderr)
-                return 2
-        # precedence: CLI flag > config file > built-in default
-        pages_path = args.pages or (cfg.paths.pages if cfg else None)
-        out_dir = args.out or (cfg.paths.out if cfg else None)
-        missing = [n for n, v in (("--pages", pages_path),
-                                  ("--out", out_dir)) if not v]
-        if missing:
-            print(
-                f"missing {' and '.join(missing)} (flag or config paths.*)",
-                file=sys.stderr,
-            )
+        pages_path = _pick(args.pages, cfg.paths.pages)
+        out_dir = _pick(args.out, cfg.paths.out)
+        if _missing("paths.*", ("--pages", pages_path), ("--out", out_dir)):
             return 2
-        max_retries = (
-            args.max_retries
-            if args.max_retries is not None
-            else (cfg.execution.max_retries if cfg else 3)
-        )
-        partitions = args.partitions or (
-            cfg.execution.partitions if cfg else None
-        )
-        spark = get_spark(
-            master=args.master or (cfg.spark.master if cfg else None),
-            shuffle_partitions=(cfg.spark.shuffle_partitions if cfg else None),
-        )
+        spark = _cfg_spark(cfg, args.master)
         try:
             res = _extract_stage(
                 spark,
                 pages_path,
                 out_dir,
                 args.input_format,
-                cfg.filters if cfg else None,
-                cfg.checkpoint if cfg else None,
-                max_retries,
-                partitions,
-                cfg.execution.track_inflight if cfg else False,
+                cfg.filters,
+                cfg.checkpoint,
+                _pick(args.max_retries, cfg.execution.max_retries),
+                _pick(args.partitions, cfg.execution.partitions),
+                cfg.execution.track_inflight,
             )
         except RuntimeError as exc:
             print(
@@ -517,128 +534,48 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.verb == "curate":
-        from gemini_ocr_batch_spark.config import (
-            ConfigError,
-            load_config,
-            load_dotenv,
-            resolve_config_path,
-        )
         from gemini_ocr_batch_spark.operators.webtext import run_curation_job
 
-        load_dotenv(".env")  # same resolution order as `run`
-        cfg = None
-        cfg_path = resolve_config_path(args.config)
-        if cfg_path:
-            try:
-                cfg = load_config(cfg_path)
-            except ConfigError as exc:
-                print(str(exc), file=sys.stderr)
-                return 2
-        extracted = args.extracted or (cfg.paths.out if cfg else None)
-        out_dir = args.out or (cfg.curation.curated_out if cfg else None)
-        missing = [n for n, v in (("--extracted", extracted),
-                                  ("--out", out_dir)) if not v]
-        if missing:
-            print(
-                f"missing {' and '.join(missing)} (flag or config "
-                "paths.out / curation.curated_out)",
-                file=sys.stderr,
-            )
+        extracted = _pick(args.extracted, cfg.paths.out)
+        out_dir = _pick(args.out, cfg.curation.curated_out)
+        if _missing("paths.out / curation.curated_out",
+                    ("--extracted", extracted), ("--out", out_dir)):
             return 2
-        min_q = (
-            args.min_quality
-            if args.min_quality is not None
-            else (cfg.curation.min_quality_x10000 if cfg else 3000)
-        )
-        max_r = (
-            args.max_rep
-            if args.max_rep is not None
-            else (cfg.curation.max_rep_x10000 if cfg else 5000)
-        )
-        spark = get_spark(
-            master=args.master or (cfg.spark.master if cfg else None),
-            shuffle_partitions=(cfg.spark.shuffle_partitions if cfg else None),
-        )
-        nfkc = (
-            args.nfkc
-            if args.nfkc is not None
-            else (cfg.curation.normalize_nfkc if cfg else False)
-        )
-        gopher = (
-            args.gopher
-            if args.gopher is not None
-            else (cfg.curation.gopher_rules if cfg else False)
-        )
+        spark = _cfg_spark(cfg, args.master)
         stats = run_curation_job(
             spark,
             extracted,
             out_dir,
-            min_quality_x10000=min_q,
-            max_rep_x10000=max_r,
-            normalize_nfkc=nfkc,
-            gopher_rules=gopher,
+            min_quality_x10000=_pick(args.min_quality,
+                                     cfg.curation.min_quality_x10000),
+            max_rep_x10000=_pick(args.max_rep, cfg.curation.max_rep_x10000),
+            normalize_nfkc=_pick(args.nfkc, cfg.curation.normalize_nfkc),
+            gopher_rules=_pick(args.gopher, cfg.curation.gopher_rules),
         )
         print(json.dumps(stats))
         return 0
 
     if args.verb == "decontaminate":
-        from gemini_ocr_batch_spark.config import (
-            ConfigError,
-            load_config,
-            load_dotenv,
-            resolve_config_path,
-        )
         from gemini_ocr_batch_spark.operators.decontam import (
             run_decontamination_job,
         )
 
-        load_dotenv(".env")  # same resolution order as `run`
-        cfg = None
-        cfg_path = resolve_config_path(args.config)
-        if cfg_path:
-            try:
-                cfg = load_config(cfg_path)
-            except ConfigError as exc:
-                print(str(exc), file=sys.stderr)
-                return 2
-        extracted = args.extracted or (cfg.paths.out if cfg else None)
-        benchmark = args.benchmark or (
-            cfg.decontam.benchmark_path if cfg else None
-        )
-        out_dir = args.out or (cfg.decontam.flags_out if cfg else None)
-        missing = [n for n, v in (("--extracted", extracted),
-                                  ("--benchmark", benchmark),
-                                  ("--out", out_dir)) if not v]
-        if missing:
-            print(
-                f"missing {' and '.join(missing)} (flag or config "
-                "paths.out / decontam.*)",
-                file=sys.stderr,
-            )
+        extracted = _pick(args.extracted, cfg.paths.out)
+        benchmark = _pick(args.benchmark, cfg.decontam.benchmark_path)
+        out_dir = _pick(args.out, cfg.decontam.flags_out)
+        if _missing("paths.out / decontam.*", ("--extracted", extracted),
+                    ("--benchmark", benchmark), ("--out", out_dir)):
             return 2
-        ngram = (
-            args.ngram if args.ngram is not None
-            else (cfg.decontam.ngram if cfg else 8)
-        )
-        min_overlap = (
-            args.min_overlap if args.min_overlap is not None
-            else (cfg.decontam.min_overlap if cfg else 1)
-        )
-        spark = get_spark(
-            master=args.master or (cfg.spark.master if cfg else None),
-            shuffle_partitions=(cfg.spark.shuffle_partitions if cfg else None),
-        )
+        spark = _cfg_spark(cfg, args.master)
         stats = run_decontamination_job(
             spark,
             extracted,
             benchmark,
             out_dir,
-            n=ngram,
-            min_overlap=min_overlap,
-            bench_text_col=(
-                args.benchmark_text_col
-                or (cfg.decontam.benchmark_text_col if cfg else "text")
-            ),
+            n=_pick(args.ngram, cfg.decontam.ngram),
+            min_overlap=_pick(args.min_overlap, cfg.decontam.min_overlap),
+            bench_text_col=_pick(args.benchmark_text_col,
+                                 cfg.decontam.benchmark_text_col),
         )
         print(json.dumps(stats))
         return 0
@@ -849,11 +786,12 @@ def main(argv: list[str] | None = None) -> int:
 
         cuts = None
         if args.cuts is not None:
-            parts = args.cuts.split(",")
-            if len(parts) != 2:
+            try:
+                head_min, middle_min = (int(x) for x in args.cuts.split(","))
+            except ValueError:
                 print("--cuts must be HEAD_MIN,MIDDLE_MIN", file=sys.stderr)
                 return 2
-            cuts = (int(parts[0]), int(parts[1]))
+            cuts = (head_min, middle_min)
         spark = get_spark(master=args.master)
         res = run_lm_score_job(
             spark,
@@ -961,22 +899,12 @@ def main(argv: list[str] | None = None) -> int:
         # verb-by-verb run produce identical artifacts; the extraction
         # checkpoint makes the chain resumable (a rerun extracts
         # nothing and deterministically rewrites the downstream tables).
-        from gemini_ocr_batch_spark.config import (
-            ConfigError,
-            load_config,
-            load_dotenv,
-            resolve_config_path,
-        )
+        # Shards are cut from curated_out/corpus; decontam.flags_out is
+        # written for the trainer to anti-join and does not filter them.
         import os
 
         from gemini_ocr_batch_spark.operators.webtext import run_curation_job
 
-        load_dotenv(".env")  # same resolution order as `run`
-        try:
-            cfg = load_config(resolve_config_path(args.config))
-        except ConfigError as exc:
-            print(str(exc), file=sys.stderr)
-            return 2
         if not cfg.curation.curated_out:
             print(
                 "pipeline: curation.curated_out required (the curate "
@@ -999,10 +927,7 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
             return 2
-        spark = get_spark(
-            master=args.master or cfg.spark.master,
-            shuffle_partitions=cfg.spark.shuffle_partitions,
-        )
+        spark = _cfg_spark(cfg, args.master)
         summary: dict = {}
 
         try:
@@ -1084,28 +1009,12 @@ def main(argv: list[str] | None = None) -> int:
         import os
 
         from gemini_ocr_batch_spark.checkpoint import ParquetCheckpointStore
-        from gemini_ocr_batch_spark.config import (
-            ConfigError,
-            load_config,
-            load_dotenv,
-            resolve_config_path,
-        )
 
-        load_dotenv(".env")  # same resolution order as `run`
-        cfg = None
-        cfg_path = resolve_config_path(args.config)
-        if cfg_path:
-            try:
-                cfg = load_config(cfg_path)
-            except ConfigError as exc:
-                print(str(exc), file=sys.stderr)
-                return 2
-        out_dir = args.out or (cfg.paths.out if cfg else None)
-        if not out_dir:
-            print("missing --out (flag or config paths.out)", file=sys.stderr)
+        out_dir = _pick(args.out, cfg.paths.out)
+        if _missing("paths.out", ("--out", out_dir)):
             return 2
-        spark = get_spark(master=args.master or (cfg.spark.master if cfg else None))
-        if cfg and cfg.checkpoint.backend == "iceberg":
+        spark = get_spark(master=_pick(args.master, cfg.spark.master))
+        if cfg.checkpoint.backend == "iceberg":
             # same backend dispatch as the run verb — a parquet store
             # pointed at an iceberg-backed run would report an empty
             # checkpoint for a finished job

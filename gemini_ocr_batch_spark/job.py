@@ -420,13 +420,6 @@ def with_prev_context(extracted: DataFrame, tail_chars: int = 500) -> DataFrame:
     )
 
 
-def read_extracted_with_context(
-    spark: SparkSession, out_dir: str, tail_chars: int = 500
-) -> DataFrame:
-    """The success-only extracted view + W3 cross-page context column."""
-    return with_prev_context(read_extracted(spark, out_dir), tail_chars)
-
-
 def apply_input_filters(pages: DataFrame, filters) -> DataFrame:
     """Config-driven input pre-filters (config.FiltersConfig): membership
     on ``lang`` (P1) + date range on ``warc_ts`` (P2) — the analog of the

@@ -223,8 +223,12 @@ def blocklist_flags(
     urls-distinct subtree on the two join sides and BROADCAST the
     survivor set (corpus-sized at crawl scale: a plan that cannot run at
     100 TB; the blocklist side is the only thing that may broadcast).
-    Exactly the rows of the old form: one row per distinct url,
-    ``blocked`` boolean, never NULL.
+    One row per distinct url, ``blocked`` boolean, never NULL, and
+    ``blocked`` is true exactly for the rows :func:`blocklist_filter`
+    drops. NULL urls follow that rule too: flagged when ``patterns`` is
+    non-empty (a NULL never passes the filter's ``~rlike`` gate), not
+    flagged by the domain list alone. The r6 form flagged every NULL
+    url, because its join back on url never matches NULL.
     """
     urls = pages.select(url_col).distinct()
     u = F.col(url_col)

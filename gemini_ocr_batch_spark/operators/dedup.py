@@ -476,11 +476,17 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     output, which depends only on gram-string equality — so the
     engine-portable md5 contract does not apply and the JVM-native
     ``xxhash64`` is used (r7: ~2× cheaper than the md5→conv chain on
-    this pass; the DuckDB oracle twin keeps its own md5 internally and
-    the outputs agree because both hashes are collision-free on real
-    corpora — a 64-bit birthday collision needs ~10^9 distinct grams
-    in one corpus to reach even ~1e-2, and a collision only matters at
-    all when it fakes a cross-document gram).  The token array is
+    this pass; the DuckDB oracle twin keeps its own md5 internally).
+    The two agree only while neither hash collides: the chance of any
+    64-bit collision among n distinct grams is ≈ n²/2^65 — ~3e-4 at
+    10^8 grams, ~3e-2 at 10^9 — so collision-free holds up to about
+    10^9 distinct grams per run, which covers every corpus the oracle
+    checks.  At web scale it does not hold (~270 expected colliding
+    pairs at 10^11 distinct grams).  A collision matters only when it
+    fakes a cross-document gram, and the ``min_docs`` gating dilutes
+    those: two otherwise-unique grams that collide pass only
+    ``min_docs=2``, and an isolated one flags a single ``k``-token
+    window, which ``min_run > 1`` also drops.  The token array is
     projected into its own column first so the split runs once per row
     instead of once per mention in the k-gram zip_with chain.
     """

@@ -1,12 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-The decode step is STUBBED (no image/audio libraries in this container —
-clearly marked below); everything Spark-side is real and tested: schema,
-Arrow batch shape, partitioning, the mapInPandas signature, and a
-deterministic fake feature extractor so downstream operators (dedup by
-content hash, size bucketing, batch resize plumbing) exercise real data
-flow.
+No image decode runs (no imaging library is a dependency): the
+dimensions are digest-derived stand-ins. Everything Spark-side is real
+and tested: schema, Arrow batch shape, partitioning and the mapInPandas
+signature.
 """
 
 from __future__ import annotations
@@ -40,15 +38,6 @@ def _sniff(blob: bytes) -> str:
     return "unknown"
 
 
-def decode_image(blob: bytes):  # pragma: no cover - intentional stub
-    """STUB: real decode needs an image library not present in this
-    container. The Spark-side plumbing (batching, schema, partitioning)
-    is real; swap this body for PIL/libvips on a full cluster image."""
-    raise NotImplementedError(
-        "image decode requires an imaging library; not available in sandbox"
-    )
-
-
 def _asset_meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         sizes, md5s, magics, kinds, ws, hs = [], [], [], [], [], []
@@ -60,7 +49,7 @@ def _asset_meta_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             magics.append(b[:4].hex())
             kinds.append(_sniff(b))
             # deterministic fake decode: "dimensions" derived from the
-            # digest — stands in for width/height until decode_image is real
+            # digest — stand-ins for a real decoder's width/height
             ws.append(int(digest[:4], 16) % 1920 + 1)
             hs.append(int(digest[4:8], 16) % 1080 + 1)
         yield pd.DataFrame(
@@ -89,122 +78,3 @@ def asset_metadata(assets: DataFrame, id_col: str = "asset_id",
         F.col(id_col).alias("asset_id"), F.col(blob_col).alias("asset")
     )
     return slim.mapInPandas(_asset_meta_batches, ASSET_META_SCHEMA)
-
-
-def resize_assets(assets: DataFrame, target_w: int, target_h: int,
-                  id_col: str = "asset_id",
-                  blob_col: str = "asset") -> DataFrame:
-    """(asset_id, asset, out_w, out_h, resized) — batch resize plumbing.
-
-    The pixel work is STUBBED (no imaging library in this container): the
-    "resized" blob is a deterministic digest-derived placeholder of
-    bounded size, so schema, Arrow batch shape, output-size accounting,
-    and downstream writes are all real and testable.  Swap ``_fake_thumb``
-    for a PIL/libvips call on a full cluster image — the operator
-    signature and plan shape do not change.
-
-    Aspect ratio: fitted inside (target_w, target_h) using the fake
-    metadata dimensions, the same contract a real thumbnailer has.
-    """
-    out_schema = (
-        f"{id_col} long, out_w int, out_h int, resized binary"
-    )
-    tw, th = int(target_w), int(target_h)
-
-    def _fake_thumb(digest: str, w: int, h: int) -> bytes:
-        # deterministic placeholder: digest-seeded bytes, length w+h —
-        # bounded, reproducible, content-addressed like a real thumb
-        seed = bytes.fromhex(digest)
-        reps = (w + h) // len(seed) + 1
-        return (seed * reps)[: w + h]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ows, ohs, blobs = [], [], [], []
-            for aid, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob) if blob is not None else b""
-                digest = hashlib.md5(b).hexdigest()
-                src_w = int(digest[:4], 16) % 1920 + 1
-                src_h = int(digest[4:8], 16) % 1080 + 1
-                scale = min(tw / src_w, th / src_h, 1.0)
-                ow, oh = max(1, int(src_w * scale)), max(1, int(src_h * scale))
-                ids.append(aid)
-                ows.append(ow)
-                ohs.append(oh)
-                blobs.append(_fake_thumb(digest, ow, oh))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "out_w": pd.Series(ows, dtype="int32"),
-                    "out_h": pd.Series(ohs, dtype="int32"),
-                    "resized": blobs,
-                }
-            )
-
-    slim = assets.select(
-        F.col(id_col).alias(id_col), F.col(blob_col).alias(blob_col)
-    )
-    return slim.mapInPandas(batches, out_schema)
-
-
-def extract_features(assets: DataFrame, dim: int = 64,
-                     id_col: str = "asset_id",
-                     blob_col: str = "asset") -> DataFrame:
-    """(asset_id, embedding array<float>) — feature-extraction plumbing.
-
-    The model inference is STUBBED: the embedding is a deterministic
-    digest-derived unit vector (md5-chained bytes → centered floats →
-    L2-normalized), so the full embed → index → search path (ivf_build /
-    lsh_topk / brute_force_topk over this output) runs end to end with
-    real data flow.  Identical content ⇒ identical embedding, which is
-    exactly the property embedding-dedup downstream relies on.  Swap the
-    body for an ONNX/torch batch call on a real cluster — Arrow batching
-    and the output schema stay as they are.
-    """
-    out_schema = f"{id_col} long, embedding array<float>"
-    d = int(dim)
-
-    def _embed(b: bytes) -> list[float]:
-        raw = bytearray()
-        cur = hashlib.md5(b).digest()
-        while len(raw) < d:
-            raw.extend(cur)
-            cur = hashlib.md5(cur).digest()
-        vals = [x - 127.5 for x in raw[:d]]
-        norm = sum(v * v for v in vals) ** 0.5 or 1.0
-        return [float(v / norm) for v in vals]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [
-                        _embed(bytes(b) if b is not None else b"")
-                        for b in pdf[blob_col]
-                    ],
-                }
-            )
-
-    slim = assets.select(
-        F.col(id_col).alias(id_col), F.col(blob_col).alias(blob_col)
-    )
-    return slim.mapInPandas(batches, out_schema)
-
-
-def frame_sample_plan(assets_meta: DataFrame, every_n: int = 30) -> DataFrame:
-    """Deterministic frame-sampling plan for video assets: which frame
-    indices to decode, derived from fake metadata (plumbing-real, decode
-    stubbed). Demonstrates the explode-to-work-items pattern used by
-    frame-level pipelines."""
-    n_frames = (F.col("byte_size") / F.lit(1024)).cast("int")
-    return (
-        assets_meta.withColumn("n_frames_est", F.greatest(n_frames, F.lit(1)))
-        .select(
-            "asset_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_frames_est") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-        .orderBy("asset_id", "frame_idx")
-    )

@@ -34,8 +34,6 @@ this is part of the beyond-reference training-data-pipeline surface.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -233,13 +231,3 @@ def bm25_oracle_sql(terms: list[str], table: str = "documents",
             FROM base CROSS JOIN st
             ORDER BY {id_col}
         """
-
-
-def idf_table(stats: dict) -> list[tuple[str, float]]:
-    """(term, idf) pairs from :func:`corpus_stats` output — the
-    driver-side audit view of what the score used."""
-    n = stats["n_docs"]
-    return [
-        (t, math.log((n - df + 0.5) / (df + 0.5) + 1.0))
-        for t, df in sorted(stats["df"].items())
-    ]

@@ -114,40 +114,6 @@ def stratified_sample(df: DataFrame, key_col: str, group_col: str,
     return df.filter(_bucket(F.col(key_col), salt) < thr)
 
 
-def mixture_rates(stats: "DataFrame | list", budget_tokens: dict[str, int],
-                  group_col: str = "lang") -> dict[str, float]:
-    """Per-group keep rates hitting a token budget — the mixing planner.
-
-    Input is :func:`~gemini_ocr_batch_spark.operators.textstats.
-    corpus_token_stats` output (a DataFrame, or its collected rows — the
-    stats table is group-cardinality-sized, so collecting it driver-side
-    is a few rows, not a data pass).  ``rate_g = min(1, budget_g /
-    total_tokens_g)``: hash sampling is token-unbiased in expectation
-    because membership is independent of document length.  Groups
-    without a budget get rate 0 (explicit-mix posture, same as
-    :func:`stratified_sample`'s default_rate).
-    """
-    rows = stats if isinstance(stats, list) else stats.collect()
-    totals = {r[group_col]: int(r["total_tokens"]) for r in rows}
-    rates: dict[str, float] = {}
-    for g, budget in budget_tokens.items():
-        if budget < 0:
-            raise ValueError(f"budget for {g!r} must be >= 0, got {budget}")
-        total = totals.get(g, 0)
-        rates[g] = 1.0 if total <= budget else budget / total
-    return rates
-
-
-def sample_mixture(df: DataFrame, key_col: str, group_col: str,
-                   stats: "DataFrame | list",
-                   budget_tokens: dict[str, int],
-                   salt: str = "strat") -> DataFrame:
-    """:func:`mixture_rates` ∘ :func:`stratified_sample`: one call from
-    "I want ≤N tokens of each source" to the deterministic kept set."""
-    rates = mixture_rates(stats, budget_tokens, group_col)
-    return stratified_sample(df, key_col, group_col, rates, salt=salt)
-
-
 def stratified_case_sql_duckdb(key_expr: str, group_expr: str,
                                rates: dict[str, float],
                                default_rate: float = 0.0,

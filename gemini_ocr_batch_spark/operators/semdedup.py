@@ -10,9 +10,9 @@ most atypical one — the paper's diversity-preserving election).
 
 Spark-first shape, built on this repo's existing primitives:
 
-- clustering is :func:`similarity.ivf_assign` (literal centroids —
-  oracle-exact) or :func:`similarity.ivf_build` (sampled KMeans fit —
-  the production path); either way the corpus is ONE assignment pass;
+- clustering is :func:`similarity.ivf_assign` against the caller's
+  centroids (literal ones are oracle-exact; fitted ones come from
+  :func:`similarity.ivf_build`) — the corpus is ONE assignment pass;
 - the pair scan is a self-join ON ``centroid_id`` — the cluster-bounded
   candidate set is the paper's own scaling argument (cells are
   ``corpus/k`` sized; pick ``k_centroids`` so a cell fits an executor,
@@ -37,74 +37,47 @@ from gemini_ocr_batch_spark.operators.dedup import connected_components
 from gemini_ocr_batch_spark.operators.similarity import (
     cosine_col,
     ivf_assign,
-    ivf_build,
 )
 
 _Q = 10_000
 
 
-def _index(embeddings: DataFrame, centroids: list[list[float]],
-           id_col: str, vec_col: str) -> DataFrame:
-    return ivf_assign(embeddings, centroids, id_col=id_col,
-                      vec_col=vec_col)
+def semdedup_keep(embeddings: DataFrame, centroids: list[list[float]],
+                  tau: float = 0.9, id_col: str = "vec_id",
+                  vec_col: str = "embedding") -> DataFrame:
+    """Keep/drop verdicts for every vector in the duplicate graph.
 
-
-def _cell_pairs(idx: DataFrame, tau: float) -> DataFrame:
-    """The one within-cluster candidate scan both public forms share:
-    self-join on ``centroid_id``, ``doc_a < doc_b``, cosine ≥ tau.
-    Returns (doc_a, doc_b, centroid_id, cosine) — callers project/
-    quantize; keeping the pair semantics in one place means the pair
-    listing and the keep election can never silently disagree about
-    which pairs are duplicates."""
-    a, b = idx.alias("a"), idx.alias("b")
-    return (
-        a.join(b, "centroid_id")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            F.col("centroid_id"),
-            cosine_col(F.col("a.v"), F.col("b.v")),
-        )
-        .filter(F.col("cosine") >= tau)
-    )
-
-
-def semdedup_pairs(embeddings: DataFrame, centroids: list[list[float]],
-                   tau: float = 0.9, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """Within-cluster near-duplicate pairs: cosine ≥ tau, both vectors
-    assigned to the same centroid.
-
-    Returns (doc_a, doc_b, centroid_id, cosine_x10000), doc_a < doc_b,
-    ordered. A cross-cluster near-dup pair is invisible by construction
-    — the paper's accepted trade (boundary pairs are rare when k is
-    sized sensibly); raise ``tau`` rather than k to tighten.
+    Returns (id, centroid_id, component, cent_cos_x10000, keep): one row
+    per vector that has at least one within-cluster neighbor at
+    cosine ≥ tau; ``keep`` marks the per-component winner — the LOWEST
+    centroid-cosine (most atypical, the paper's election), ties by id.
+    Vectors with no such neighbor never enter the pair graph and are
+    implicitly kept (same contract as dedup.near_dedup_keep_list — at
+    scale the component step must only ever see the dup-graph minority).
+    A cross-cluster near-dup pair is invisible by construction — the
+    paper's accepted trade (boundary pairs are rare when k is sized
+    sensibly); raise ``tau`` rather than k to tighten.
     """
-    idx = _index(embeddings, centroids, id_col, vec_col)
-    return (
-        _cell_pairs(idx, tau)
-        .select(
-            "doc_a",
-            "doc_b",
-            "centroid_id",
-            F.floor(F.col("cosine") * _Q + F.lit(0.5))
-            .cast("bigint")
-            .alias("cosine_x10000"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def _keep_from_index(idx: DataFrame, centroids: list[list[float]],
-                     tau: float) -> DataFrame:
     # materialize the assignment once (r7): the pair scan consumes idx on
     # BOTH self-join sides and the election scores it a third time, so
     # the argmin-over-centroids pass ran 3× — (id, centroid_id, vector)
     # is exactly the table the persisted-index job (`index` verb) writes
     # to disk at scale, so cutting here mirrors the production layout
-    idx = idx.localCheckpoint(eager=True)
-    pairs = _cell_pairs(idx, tau).select("doc_a", "doc_b")
+    idx = ivf_assign(embeddings, centroids, id_col=id_col,
+                     vec_col=vec_col).localCheckpoint(eager=True)
+    # the within-cluster candidate scan: equi-join on centroid_id
+    a, b = idx.alias("a"), idx.alias("b")
+    pairs = (
+        a.join(b, "centroid_id")
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
+            cosine_col(F.col("a.v"), F.col("b.v")),
+        )
+        .filter(F.col("cosine") >= tau)
+        .select("doc_a", "doc_b")
+    )
     comp = connected_components(pairs)
     cent_arr = F.array(*[
         F.array(*[F.lit(float(c)) for c in cent]) for cent in centroids
@@ -130,36 +103,3 @@ def _keep_from_index(idx: DataFrame, centroids: list[list[float]],
         scored.withColumn("keep", F.row_number().over(w) == 1)
         .orderBy("id")
     )
-
-
-def semdedup_keep(embeddings: DataFrame, centroids: list[list[float]],
-                  tau: float = 0.9, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """Keep/drop verdicts for every vector in the duplicate graph.
-
-    Returns (id, centroid_id, component, cent_cos_x10000, keep): one row
-    per vector that has at least one within-cluster neighbor at
-    cosine ≥ tau; ``keep`` marks the per-component winner — the LOWEST
-    centroid-cosine (most atypical, the paper's election), ties by id.
-    Vectors with no such neighbor never enter the pair graph and are
-    implicitly kept (same contract as dedup.near_dedup_keep_list — at
-    scale the component step must only ever see the dup-graph minority).
-    """
-    idx = _index(embeddings, centroids, id_col, vec_col)
-    return _keep_from_index(idx, centroids, tau)
-
-
-def semdedup_fit(embeddings: DataFrame, k_centroids: int = 16,
-                 tau: float = 0.9, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 seed: int = 7) -> tuple[DataFrame, list[list[float]]]:
-    """The production path: fit centroids (sampled KMeans via
-    :func:`similarity.ivf_build`), then run the election against the
-    fitted cells. Returns (keep_df, centroids) so the caller can persist
-    the centroids for incremental re-runs (new crawl snapshots assign
-    against frozen cells — no refit, no cross-snapshot drift)."""
-    idx, centroids = ivf_build(
-        embeddings, k_centroids=k_centroids, id_col=id_col,
-        vec_col=vec_col, seed=seed,
-    )
-    return _keep_from_index(idx, centroids, tau), centroids

@@ -11,7 +11,6 @@ equivalent: bad lines land in a corrupt-record column, good lines parse.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
@@ -22,7 +21,10 @@ def read_jsonl_tolerant(
 ) -> DataFrame:
     """Read JSONL with a declared schema; malformed lines survive as rows
     with ``_corrupt_record`` set (the reference's tolerate-bad-lines
-    contract). Callers split on ``_corrupt_record IS NULL``.
+    contract). Callers split on ``_corrupt_record IS NULL``, caching the
+    frame first: Spark refuses a query that references ONLY the corrupt
+    column of a raw JSON scan
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN).
     """
     full = T.StructType(
         list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
@@ -33,19 +35,6 @@ def read_jsonl_tolerant(
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
-
-
-def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid rows without the corrupt col, corrupt rows).
-
-    Spark forbids queries that reference ONLY the corrupt-record column of
-    a raw JSON scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN);
-    the documented pattern is to cache the parsed frame first.
-    """
-    df = df.cache()
-    valid = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
-    return valid, bad
 
 
 def write_jsonl(df: DataFrame, path: str, single_file: bool = False) -> None:

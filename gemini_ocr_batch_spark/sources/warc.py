@@ -132,17 +132,6 @@ def warc_to_pages(records: DataFrame, ok_status_only: bool = True) -> DataFrame:
     )
 
 
-def wet_to_docs(records: DataFrame) -> DataFrame:
-    """Project WET ``conversion`` records to (url, warc_ts, text)."""
-    return records.filter(
-        F.col("error").isNull() & (F.col("warc_type") == "conversion")
-    ).select(
-        "url",
-        "warc_ts",
-        F.col("payload").cast("string").alias("text"),
-    )
-
-
 WET_STATS_SCHEMA = T.StructType(
     [
         T.StructField("wet_file", T.StringType(), False),

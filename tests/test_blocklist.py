@@ -149,9 +149,14 @@ def test_config_parses_blocklist_fields(tmp_path):
 
 
 def test_blocklist_property_fuzz_vs_python_model(spark):
-    """Property fuzz: over random host/blocklist combinations, the
-    chained suffix anti-joins agree with the direct python definition
-    (host == domain OR host endswith '.' + domain)."""
+    """Property fuzz: over random host/blocklist/pattern combinations,
+    the chained suffix anti-joins agree with the direct python definition
+    (host == domain OR host endswith '.' + domain, or a pattern hits the
+    raw url), and ``blocklist_flags`` flags exactly the rows the filter
+    drops — NULL urls (dropped by any pattern, kept by a domain list) and
+    empty ``patterns`` included."""
+    import re
+
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -161,43 +166,57 @@ def test_blocklist_property_fuzz_vs_python_model(spark):
         st.lists(label, min_size=1, max_size=3).map(".".join),
         min_size=0, max_size=4, unique=True,
     )
+    patterns = st.sampled_from([[], ["ads"], ["c1/", r"\.net\."]])
 
-    cases: list[tuple[list[str], list[str]]] = []
+    cases: list[tuple[list[str], list[str], list[str]]] = []
 
     @settings(max_examples=60, deadline=None)
-    @given(st.lists(host, min_size=1, max_size=6, unique=True), blocked)
-    def collect(hosts, bl):
-        cases.append((hosts, bl))
+    @given(st.lists(host, min_size=1, max_size=6, unique=True), blocked,
+           patterns)
+    def collect(hosts, bl, pats):
+        cases.append((hosts, bl, pats))
 
     collect()
 
-    # one Spark job per (hosts, blocklist) pair would take minutes; the
-    # semantics are per-row, so replay every case through TWO jobs by
-    # tagging rows with a case id and giving each case its own url space
-    rows, bl_rows, want_kept = [], [], set()
-    for ci, (hosts, bl) in enumerate(cases):
+    # one Spark job per case would take minutes; the semantics are
+    # per-row, so every case gets its own host space — its case id as the
+    # last host label, appended to its blocklist entries too, so no entry
+    # can match across cases — and the cases run through one filter job
+    # and one flags job per pattern set (plus one NULL url per set)
+    rows, bl_rows, want_kept = {}, {}, set()
+    for ci, (hosts, bl, pats) in enumerate(cases):
+        key = tuple(pats)
+        rows.setdefault(key, [None])
+        bl_rows.setdefault(key, []).extend(f"{d}.c{ci}" for d in bl)
         for h in hosts:
-            url = f"https://{h}/c{ci}"
-            rows.append((f"c{ci}", url))
+            url = f"https://{h}.c{ci}/p"
+            rows[key].append(url)
             hit = any(h == d or h.endswith("." + d) for d in bl)
+            hit = hit or any(re.search(p, url) for p in pats)
             if not hit:
-                want_kept.add(url)
-        for d in bl:
-            bl_rows.append((f"c{ci}", d))
-    pages = spark.createDataFrame(rows, "case string, url string")
-    got_kept = set()
-    for ci in {c for c, _ in rows}:
+                want_kept.add((key, url))
+    for key in rows:
+        if not key:  # a NULL url never passes a pattern's ~rlike gate
+            want_kept.add((key, None))
+    got_kept, got_flags = set(), {}
+    for key, urls in rows.items():
+        pages = spark.createDataFrame([(u,) for u in urls], "url string")
         bl_df = spark.createDataFrame(
-            [(d,) for c, d in bl_rows if c == ci] or [("zz.invalid",)],
+            [(d,) for d in bl_rows[key]] or [("zz.invalid",)],
             "domain string",
         )
-        kept = blocklist_filter(
-            pages.filter(pages["case"] == ci), bl_df, max_labels=5
-        )
-        got_kept |= {r["url"] for r in kept.collect()}
-        if len(got_kept) > 10_000:  # safety, never expected
-            break
+        kept = blocklist_filter(pages, bl_df, patterns=list(key),
+                                max_labels=6)
+        got_kept |= {(key, r["url"]) for r in kept.collect()}
+        flags = blocklist_flags(pages, bl_df, patterns=list(key),
+                                max_labels=6)
+        got_flags.update(
+            {(key, r["url"]): r["blocked"] for r in flags.collect()})
     assert got_kept == want_kept
+    assert got_flags == {(key, u): (key, u) not in want_kept
+                         for key, urls in rows.items() for u in urls}
+    assert any(not b for b in got_flags.values())
+    assert any(got_flags.values())
 
 
 def test_blocklist_filter_works_on_streams(spark, tmp_path):

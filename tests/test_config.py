@@ -326,3 +326,171 @@ def test_sharding_section_validation():
     assert cfg2.decontam.benchmark_text_col == "body"
     with pytest.raises(ConfigError, match="decontam.benchmark_text_col"):
         validate_config({**base, "decontam": {"benchmark_text_col": ""}})
+
+
+# ---------------------------------------------------------------------------
+# CLI precedence, without Spark: flag > config file > dataclass default
+# ---------------------------------------------------------------------------
+
+# flags every leg passes, so each verb has its input/output paths
+_CLI_BASE = {
+    "run": ["--pages", "/in/pages", "--out", "/in/out"],
+    "curate": ["--extracted", "/in/out", "--out", "/in/cur"],
+    "decontaminate": ["--extracted", "/in/out", "--benchmark", "/in/bench",
+                      "--out", "/in/flags"],
+    "status": ["--out", "/in/out"],
+    "pipeline": [],
+}
+
+# (verb, flag or None, section, key, config value, flag value, getter over
+# the captured calls)
+_CLI_KNOBS = [
+    ("run", "--max-retries", "execution", "max_retries", 5, 7,
+     lambda c: c["extract"][6]),
+    ("run", "--partitions", "execution", "partitions", 6, 9,
+     lambda c: c["extract"][7]),
+    ("run", "--master", "spark", "master", "local[2]", "local[3]",
+     lambda c: c["spark"]["master"]),
+    ("curate", "--min-quality", "curation", "min_quality_x10000", 1234, 4321,
+     lambda c: c["curate"][1]["min_quality_x10000"]),
+    ("curate", "--max-rep", "curation", "max_rep_x10000", 2345, 5432,
+     lambda c: c["curate"][1]["max_rep_x10000"]),
+    ("curate", "--master", "spark", "master", "local[2]", "local[3]",
+     lambda c: c["spark"]["master"]),
+    ("decontaminate", "--ngram", "decontam", "ngram", 5, 6,
+     lambda c: c["decontam"][1]["n"]),
+    ("decontaminate", "--min-overlap", "decontam", "min_overlap", 2, 3,
+     lambda c: c["decontam"][1]["min_overlap"]),
+    ("decontaminate", "--benchmark-text-col", "decontam",
+     "benchmark_text_col", "question", "body",
+     lambda c: c["decontam"][1]["bench_text_col"]),
+    ("status", "--master", "spark", "master", "local[2]", "local[3]",
+     lambda c: c["spark"]["master"]),
+    ("pipeline", "--master", "spark", "master", "local[2]", "local[3]",
+     lambda c: c["spark"]["master"]),
+    ("pipeline", None, "execution", "max_retries", 5, None,
+     lambda c: c["extract"][6]),
+    ("pipeline", None, "curation", "min_quality_x10000", 1234, None,
+     lambda c: c["curate"][1]["min_quality_x10000"]),
+]
+
+
+@pytest.fixture
+def cli_calls(monkeypatch, tmp_path):
+    """Run the CLI with Spark and every stage replaced by recorders; no
+    .env and no $SPARK_GRAFT_CONFIG leak in from the environment."""
+    import types
+
+    from gemini_ocr_batch_spark import __main__ as cli
+    from gemini_ocr_batch_spark import checkpoint, session
+    from gemini_ocr_batch_spark.operators import decontam, webtext
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv(CONFIG_ENV_VAR, raising=False)
+    calls: dict = {}
+
+    def record(name, result):
+        def fn(*args, **kwargs):
+            calls[name] = (args, kwargs)
+            return result
+        return fn
+
+    def extract(*args):
+        calls["extract"] = args
+        return types.SimpleNamespace(passes=1, extracted_rows=0,
+                                     success_rows=0, failed_rows=0,
+                                     wall_sec=0.0, docs_per_sec=0.0)
+
+    class Store:
+        def __init__(self, path):
+            calls["store"] = path
+
+        def counts_by_status(self, spark):
+            return types.SimpleNamespace(collect=lambda: [])
+
+    def get_spark(**kwargs):
+        calls["spark"] = kwargs
+        return object()
+
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    monkeypatch.setattr(cli, "_extract_stage", extract)
+    monkeypatch.setattr(webtext, "run_curation_job", record("curate", {}))
+    monkeypatch.setattr(decontam, "run_decontamination_job",
+                        record("decontam", {}))
+    monkeypatch.setattr(checkpoint, "ParquetCheckpointStore", Store)
+    return calls
+
+
+def _cli_config(tmp_path, verb, sections):
+    import yaml
+
+    raw = {"paths": {"pages": "/cfg/pages", "out": "/cfg/out"}}
+    if verb == "pipeline":
+        raw["curation"] = {"curated_out": "/cfg/cur"}
+    for section, values in sections.items():
+        raw.setdefault(section, {}).update(values)
+    return _write(tmp_path, yaml.safe_dump(raw), name=f"{verb}.yaml")
+
+
+@pytest.mark.parametrize("verb", list(_CLI_BASE))
+def test_cli_precedence_flag_config_default(verb, cli_calls, tmp_path,
+                                           capsys):
+    from gemini_ocr_batch_spark import config as C
+    from gemini_ocr_batch_spark.__main__ import main
+
+    knobs = [k for k in _CLI_KNOBS if k[0] == verb]
+    sections: dict = {}
+    flags: list = []
+    for _v, flag, section, key, cfg_val, flag_val, _get in knobs:
+        sections.setdefault(section, {})[key] = cfg_val
+        if flag is not None:
+            flags += [flag, str(flag_val)]
+    cfg_path = _cli_config(tmp_path, verb, sections)
+    base = [verb] + _CLI_BASE[verb]
+    classes = {"execution": C.ExecutionConfig, "spark": C.SparkConfig,
+               "curation": C.CurationConfig, "decontam": C.DecontamConfig}
+
+    # flag beats config
+    assert main(base + ["--config", cfg_path] + flags) == 0
+    for _v, flag, _s, key, cfg_val, flag_val, get in knobs:
+        want = cfg_val if flag is None else flag_val
+        assert get(cli_calls) == want, (key, "flag over config")
+
+    # config beats default
+    cli_calls.clear()
+    assert main(base + ["--config", cfg_path]) == 0
+    for _v, _f, _s, key, cfg_val, _fv, get in knobs:
+        assert get(cli_calls) == cfg_val, (key, "config over default")
+
+    # no flag, no config value: the config.py dataclass default
+    cli_calls.clear()
+    bare = (["--config", _cli_config(tmp_path, verb, {})]
+            if verb == "pipeline" else [])
+    assert main(base + bare) == 0
+    for _v, _f, section, key, _cv, _fv, get in knobs:
+        assert get(cli_calls) == getattr(classes[section], key), (
+            key, "dataclass default")
+    if verb == "status":
+        assert cli_calls["store"] == os.path.join("/in/out", "checkpoint")
+    if verb == "pipeline":
+        # a half-configured decontam section is refused before any stage
+        # or session starts
+        cli_calls.clear()
+        half = _cli_config(tmp_path, verb,
+                           {"decontam": {"benchmark_path": "/in/bench"}})
+        assert main(["pipeline", "--config", half]) == 2
+        assert "decontam.flags_out required" in capsys.readouterr().err
+        assert cli_calls == {}
+
+
+def test_cli_given_flag_never_falls_through(cli_calls, tmp_path, capsys):
+    """A given flag wins even when falsy: ``--out ""`` is a missing path,
+    not a fall-through to paths.out, and ``--partitions 0`` reaches the
+    job (where 0 means defaultParallelism) instead of the config value."""
+    from gemini_ocr_batch_spark.__main__ import main
+
+    cfg_path = _cli_config(tmp_path, "run", {"execution": {"partitions": 6}})
+    assert main(["run", "--config", cfg_path, "--out", ""]) == 2
+    assert "missing --out" in capsys.readouterr().err
+    assert main(["run", "--config", cfg_path, "--partitions", "0"]) == 0
+    assert cli_calls["extract"][7] == 0

@@ -182,30 +182,3 @@ def test_decontamination_job_end_to_end(spark, tmp_path):
     }
     assert flags["https://leak.example/0"] is True
     assert flags["https://clean.example/0"] is False
-
-
-def test_mixture_rates_and_sample_mixture(spark):
-    from gemini_ocr_batch_spark.operators.sampling import (
-        mixture_rates,
-        sample_mixture,
-    )
-
-    # en: 4000 docs x 10 tokens = 40k tokens; de: 1000 x 10 = 10k
-    rows = [(i, "tok " * 9 + "tok", ["en", "de"][i % 5 == 0])
-            for i in range(5000)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    stats = corpus_token_stats(df, "lang")
-    rates = mixture_rates(stats, {"en": 10_000, "de": 50_000})
-    assert rates["de"] == 1.0               # budget exceeds the corpus
-    assert abs(rates["en"] - 0.25) < 0.01   # 10k of 40k
-    kept = sample_mixture(df, "doc_id", "lang", stats,
-                          {"en": 10_000, "de": 50_000})
-    by = {r["lang"]: 0 for r in kept.select("lang").distinct().collect()}
-    for r in kept.groupBy("lang").count().collect():
-        by[r["lang"]] = r["count"]
-    assert by["de"] == 1000                 # rate 1.0 keeps all
-    assert 800 < by["en"] < 1200            # ~25% of 4000, binomial band
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        mixture_rates(stats, {"en": -1})

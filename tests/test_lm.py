@@ -170,7 +170,7 @@ def test_bucket_cuts_and_assignment(spark, corpus):
         perplexity_buckets(scores, c1 - 1, c1)  # head below middle
 
 
-def test_lm_score_cli_cuts(spark, tmp_path, corpus):
+def test_lm_score_cli_cuts(spark, tmp_path, corpus, capsys):
     import json
 
     from gemini_ocr_batch_spark.__main__ import main
@@ -187,9 +187,12 @@ def test_lm_score_cli_cuts(spark, tmp_path, corpus):
     middle = vals[60]  # gibberish lands in middle at exactly its score
     import pytest as _pytest
 
-    # malformed cuts (one value) → usage error, not a traceback
-    assert main(["lm-score", "--corpus", corpus_path, "--model", model_dir,
-                 f"--cuts={head}"]) == 2
+    # malformed cuts (one value, non-integers) → usage error, not a
+    # traceback
+    for bad in (f"{head}", "a,b"):
+        assert main(["lm-score", "--corpus", corpus_path, "--model",
+                     model_dir, f"--cuts={bad}"]) == 2
+        assert "--cuts must be HEAD_MIN,MIDDLE_MIN" in capsys.readouterr().err
     assert main(["lm-score", "--corpus", corpus_path, "--model", model_dir,
                  f"--cuts={head},{middle}",
                  "--out", str(tmp_path / "bucketed")]) == 0

@@ -135,11 +135,11 @@ def test_prev_context_view(spark, pages_df, tmp_path):
     """W3 wired into the job output: each page carries the tail of the
     previous page on the same domain (reference: src/batch_builder.py:90-109
     prev-page context injection)."""
-    from gemini_ocr_batch_spark.job import read_extracted_with_context
+    from gemini_ocr_batch_spark.job import read_extracted, with_prev_context
 
     out = str(tmp_path / "out")
     run_extraction_job(spark, pages_df, out)
-    ctx = read_extracted_with_context(spark, out, tail_chars=100)
+    ctx = with_prev_context(read_extracted(spark, out), tail_chars=100)
     rows = ctx.select("domain", "warc_ts", "url", "extracted_text",
                       "prev_context").collect()
     assert rows, "no extracted rows"

@@ -11,7 +11,6 @@ from gemini_ocr_batch_spark.operators.retrieval import (
     bm25_scores,
     bm25_topk,
     corpus_stats,
-    idf_table,
 )
 
 DOCS = [
@@ -89,8 +88,6 @@ def test_frozen_stats_reuse(spark, docs_df):
     live = bm25_scores(docs_df, TERMS).collect()
     frozen = bm25_scores(docs_df, TERMS, stats=stats).collect()
     assert live == frozen
-    idfs = dict(idf_table(stats))
-    assert idfs["missingterm"] > idfs["spark"]  # rarer => larger idf
 
 
 def test_term_validation(spark, docs_df):

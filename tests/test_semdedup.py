@@ -80,16 +80,20 @@ def emb_df(spark):
 
 
 def test_pairs_are_cell_bounded(spark, emb_df):
-    from gemini_ocr_batch_spark.operators.semdedup import semdedup_pairs
+    from gemini_ocr_batch_spark.operators.semdedup import semdedup_keep
 
-    got = [(r["doc_a"], r["doc_b"])
-           for r in semdedup_pairs(emb_df, CENTROIDS, tau=TAU).collect()]
-    want, _rows = _model()
-    assert got == sorted(want)
+    # the duplicate sets semdedup_keep reports are exactly the connected
+    # sets of the model's within-cell pairs
+    got: dict[int, set] = {}
+    for r in semdedup_keep(emb_df, CENTROIDS, tau=TAU).collect():
+        got.setdefault(r["component"], set()).add(r["id"])
+    pairs, _rows = _model()
+    assert sorted(pairs) == [(0, 1), (0, 2), (1, 2), (4, 5)]
+    assert sorted(map(sorted, got.values())) == [[0, 1, 2], [4, 5]]
     # v7 ~ v0 (cosine > 0.98) but sits in the other cell: invisible by
     # construction — the paper's accepted cross-cluster trade
     assert _cos(dict(VECS)[0], dict(VECS)[7]) < TAU  # sanity: angled off
-    assert (0, 7) not in got and (4, 7) not in got
+    assert all(7 not in ids for ids in got.values())
 
 
 def test_keep_matches_python_model(spark, emb_df):
@@ -124,7 +128,8 @@ def test_election_keeps_most_atypical(spark, emb_df):
 
 
 def test_fitted_path_finds_planted_dups(spark):
-    from gemini_ocr_batch_spark.operators.semdedup import semdedup_fit
+    from gemini_ocr_batch_spark.operators.semdedup import semdedup_keep
+    from gemini_ocr_batch_spark.operators.similarity import ivf_build
 
     # 3 planted dup pairs in well-separated directions + 44 spread
     # singles; the KMeans fit only has to separate space, not be exact
@@ -143,7 +148,8 @@ def test_fitted_path_finds_planted_dups(spark):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<double>",
     )
-    keep, cents = semdedup_fit(emb, k_centroids=4, tau=0.999, seed=3)
+    _idx, cents = ivf_build(emb, k_centroids=4, seed=3)
+    keep = semdedup_keep(emb, cents, tau=0.999)
     got = {r["id"]: r["keep"] for r in keep.collect()}
     assert len(cents) == 4
     for bid in base:
@@ -153,10 +159,10 @@ def test_fitted_path_finds_planted_dups(spark):
     assert all(i < 100 for i in got)
 
 
-def test_plan_no_cartesian(spark, tmp_path):
+def test_plan_no_cartesian(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
-    from gemini_ocr_batch_spark.operators.semdedup import semdedup_pairs
+    from gemini_ocr_batch_spark.operators import semdedup
 
     spark.range(0, 300).select(
         F.col("id").alias("vec_id"),
@@ -164,8 +170,19 @@ def test_plan_no_cartesian(spark, tmp_path):
         .alias("embedding"),
     ).write.parquet(str(tmp_path / "emb"))
     emb = spark.read.parquet(str(tmp_path / "emb"))
-    plan = semdedup_pairs(emb, CENTROIDS, tau=0.9)._jdf \
-        .queryExecution().executedPlan().toString()
+    # capture the candidate-pair frame semdedup_keep hands to the
+    # component step
+    plans = []
+    real = semdedup.connected_components
+
+    def spy(pairs, *a, **kw):
+        plans.append(pairs._jdf.queryExecution().executedPlan().toString())
+        return real(pairs, *a, **kw)
+
+    monkeypatch.setattr(semdedup, "connected_components", spy)
+    semdedup.semdedup_keep(emb, CENTROIDS, tau=0.9)
+    (plan,) = plans
+    assert "centroid_id" in plan
     # candidate generation is the equi-join on centroid_id — never a
     # cartesian/nested-loop pass over the corpus
     assert "CartesianProduct" not in plan

@@ -7,10 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from gemini_ocr_batch_spark.operators.multimodal import (
-    asset_metadata,
-    frame_sample_plan,
-)
+from gemini_ocr_batch_spark.operators.multimodal import asset_metadata
 from gemini_ocr_batch_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup_pairs,
@@ -204,16 +201,6 @@ def test_asset_metadata_plumbing(spark):
     assert out[4]["byte_size"] == 0
     assert out[1]["byte_size"] == 104
     assert 1 <= out[1]["fake_width"] <= 1920
-    plan = frame_sample_plan(asset_metadata(df).filter(F.col("byte_size") > 0),
-                             every_n=30)
-    assert plan.count() >= 3  # at least frame 0 per non-empty asset
-
-
-def test_decode_stub_raises(spark):
-    from gemini_ocr_batch_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff")
 
 
 def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
@@ -395,42 +382,3 @@ def test_index_and_search_cli_verbs(spark, sf_dir, tmp_path, capsys):
     assert [h["rank"] for h in hits] == [1, 2, 3, 4, 5]
     assert all(-1.0 <= h["cosine"] <= 1.0 for h in hits)
     assert hits == sorted(hits, key=lambda h: -h["cosine"])
-
-
-def test_resize_assets_plumbing(spark):
-    from gemini_ocr_batch_spark.operators.multimodal import resize_assets
-
-    rows = [(1, b"\xff\xd8\xff fake jpeg bytes"), (2, b""), (3, None)]
-    df = spark.createDataFrame(rows, "asset_id long, asset binary")
-    got = {r["asset_id"]: r for r in
-           resize_assets(df, 320, 240).collect()}
-    assert set(got) == {1, 2, 3}
-    for r in got.values():
-        assert 1 <= r["out_w"] <= 320 and 1 <= r["out_h"] <= 240
-        assert len(r["resized"]) == r["out_w"] + r["out_h"]
-    # deterministic: same content -> same placeholder
-    again = {r["asset_id"]: bytes(r["resized"])
-             for r in resize_assets(df, 320, 240).collect()}
-    assert {k: bytes(v["resized"]) for k, v in got.items()} == again
-
-
-def test_extract_features_feeds_ann_end_to_end(spark):
-    """embed → search: the digest-derived fake embeddings are unit
-    vectors, identical content embeds identically, and the output drops
-    straight into the ANN operators (self is its own nearest)."""
-    import math
-
-    from gemini_ocr_batch_spark.operators.multimodal import extract_features
-
-    rows = [(i, f"document number {i} content".encode()) for i in range(20)]
-    rows.append((100, rows[0][1]))  # exact duplicate content of asset 0
-    df = spark.createDataFrame(rows, "asset_id long, asset binary")
-    emb = extract_features(df, dim=16)
-    got = {r["asset_id"]: list(r["embedding"]) for r in emb.collect()}
-    assert got[100] == got[0]  # content-addressed
-    for v in got.values():
-        assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-5
-    top = brute_force_topk(
-        emb.withColumnRenamed("asset_id", "vec_id"), got[5], k=3,
-    ).collect()
-    assert top[0]["vec_id"] == 5
