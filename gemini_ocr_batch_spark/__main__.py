@@ -528,6 +528,7 @@ def main(argv: list[str] | None = None) -> int:
                     "failed_rows": res.failed_rows,
                     "wall_sec": round(res.wall_sec, 3),
                     "docs_per_sec": round(res.docs_per_sec, 1),
+                    "phase_secs": res.phase_secs,
                 }
             )
         )
@@ -953,6 +954,7 @@ def main(argv: list[str] | None = None) -> int:
             "extracted_rows": res.extracted_rows,
             "success_rows": res.success_rows,
             "failed_rows": res.failed_rows,
+            "phase_secs": res.phase_secs,
         }
 
         summary["curate"] = run_curation_job(

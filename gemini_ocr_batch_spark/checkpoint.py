@@ -8,9 +8,9 @@ in-memory store behind the same interface):
 
 - ``ParquetCheckpointStore`` (sandbox + any vanilla Spark): snapshots are
   hive-partitioned by ``bucket = h60(url) % B`` (60-bit md5 prefix — NOT
-  xxhash64: md5 is the one hash the driver, DuckDB, and the JVM all
-  reproduce bit-identically, which is what makes the driver-side
-  small-pass merge fast path possible) and the atomically
+  xxhash64: md5 is the one hash DuckDB and the JVM both reproduce
+  bit-identically, which is what lets the driver-side DuckDB MERGE write
+  the same buckets as the Spark one) and the atomically
   replaced ``_CURRENT`` pointer is a JSON *manifest* mapping each bucket to
   the snapshot version that last rewrote it. A MERGE therefore reads and
   rewrites ONLY the buckets containing delta keys — O(|delta| + touched
@@ -29,6 +29,7 @@ in-memory store behind the same interface):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -57,41 +58,72 @@ class CheckpointConflict(RuntimeError):
     """Another writer advanced the checkpoint mid-merge (lost-update guard)."""
 
 
-# small-pass driver-side merge ceiling: above this the pass is executor
-# work; below it, spinning 2-3 Spark jobs costs more than the merge itself
-LOCAL_MERGE_MAX_ROWS = 2_000_000
-
-
-def _sql_str(path: str) -> str:
-    """A filesystem path as a DuckDB single-quoted string literal.
+def sql_str(value: str) -> str:
+    """A string (usually a filesystem path) as a DuckDB single-quoted
+    string literal.
 
     read_parquet list args and COPY ... TO targets cannot be bound as
     prepared-statement parameters, so paths are interpolated — doubling
     embedded quotes keeps a path like ``/data/o'brien`` from producing
     malformed SQL.
     """
-    return "'" + path.replace("'", "''") + "'"
+    return "'" + value.replace("'", "''") + "'"
+
+
+def parquet_glob(staged_path: str) -> str | None:
+    """The recursive parquet glob of a staged pass dir, or None when the
+    pass wrote no data files (DuckDB's read_parquet rejects an empty
+    glob; an empty frontier writes only ``_SUCCESS``)."""
+    staged_glob = os.path.join(staged_path, "**", "*.parquet")
+    return staged_glob if glob.glob(staged_glob, recursive=True) else None
 
 
 def _bucket_col(n_buckets: int):
     """bucket = (60-bit md5 prefix of url) % B.
 
-    md5 instead of xxhash64 so the DRIVER can compute the identical bucket
-    with hashlib (``bucket_of``) — that is what makes the small-delta
-    driver-side merge fast path possible. Hashing cost is once per merged
-    key, noise next to the bucket shuffle. Plays the same role as the
-    Iceberg twin's bucket(B, url) transform.
+    md5 instead of xxhash64 so DuckDB computes the identical bucket
+    (``_bucket_sql``) — that is what lets the driver-side MERGE rewrite
+    the same bucket files as the Spark one. Hashing cost is once per
+    merged key, noise next to the bucket shuffle. Plays the same role as
+    the Iceberg twin's bucket(B, url) transform.
     """
     from gemini_ocr_batch_spark.functions.hashing import h60
 
     return F.pmod(h60(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
-def bucket_of(url: str, n_buckets: int) -> int:
-    """Driver-side twin of ``_bucket_col`` (hashlib md5 == Spark md5)."""
-    import hashlib
+def _bucket_sql(url_sql: str, n_buckets: int) -> str:
+    """The DuckDB twin of ``_bucket_col``: h60(url) % B."""
+    return (
+        f"(('0x' || substr(md5({url_sql}), 1, 15))::BIGINT "
+        f"% {n_buckets})::INT"
+    )
 
-    return int(hashlib.md5(url.encode("utf-8")).hexdigest()[:15], 16) % n_buckets
+
+def _transition_sql(max_retries: int) -> list[str]:
+    """The pass transition, written once for the Parquet store.
+
+    SQL text over the full outer join of the touched old checkpoint rows
+    ``o`` and the pass's ``d`` = (url, warc_ts, error_type) rows. Spark's
+    ``merge_results`` evaluates it with ``F.expr``; the DuckDB COPY of
+    ``merge_results_local`` interpolates it. Analog of the reference's
+    close-batch + increment-failure-counts transitions (reference:
+    src/prefect_state.py:111-155,176-199): a key absent from the pass
+    keeps its row; success → success; failure → attempts+1, failed, or
+    dead once attempts ≥ max_retries (dead-letter predicate, reference:
+    src/scanner.py:87-88).
+    """
+    return [
+        f"CASE WHEN d.url IS NULL THEN o.status"
+        f" WHEN d.error_type IS NULL THEN '{STATUS_SUCCESS}'"
+        f" WHEN coalesce(o.attempts, 0) + 1 >= {int(max_retries)}"
+        f" THEN '{STATUS_DEAD}' ELSE '{STATUS_FAILED}' END AS status",
+        "CAST(coalesce(o.attempts, 0)"
+        " + CASE WHEN d.url IS NULL THEN 0 ELSE 1 END AS INT) AS attempts",
+        "coalesce(d.error_type, o.last_error) AS last_error",
+        "CASE WHEN d.url IS NULL THEN o.updated_at ELSE now() END"
+        " AS updated_at",
+    ]
 
 
 class ParquetCheckpointStore:
@@ -365,257 +397,147 @@ class ParquetCheckpointStore:
         )
 
     def merge_results(self, extracted: DataFrame) -> None:
-        """MERGE the outcome of one extraction pass into the checkpoint.
-
-        Analog of the reference's close-batch + increment-failure-counts
-        transitions (reference: src/prefect_state.py:111-155,176-199):
-        success → status=success; failure → attempts+1, status=failed, or
-        dead once attempts ≥ max_retries (dead-letter predicate, reference:
-        src/scanner.py:87-88).
-        """
-        delta = extracted.select(
-            "url",
-            "warc_ts",
-            F.when(F.col("error_type").isNull(), F.lit(STATUS_SUCCESS))
-            .otherwise(F.lit(STATUS_FAILED))
-            .alias("new_status"),
-            F.col("error_type").alias("new_error"),
-        )
+        """MERGE the outcome of one extraction pass into the checkpoint:
+        the Spark evaluation of ``_transition_sql``."""
+        spark = extracted.sparkSession
+        delta = extracted.select("url", "warc_ts", "error_type")
+        transition = [F.expr(e) for e in _transition_sql(self.max_retries)]
 
         def combine(old: DataFrame | None, d: DataFrame) -> DataFrame:
             if old is None:
-                return d.select(
-                    "url",
-                    "warc_ts",
-                    F.when(
-                        (F.col("new_status") == STATUS_FAILED)
-                        & (F.lit(1) >= F.lit(self.max_retries)),
-                        F.lit(STATUS_DEAD),
-                    )
-                    .otherwise(F.col("new_status"))
-                    .alias("status"),
-                    F.lit(1).cast("int").alias("attempts"),
-                    F.col("new_error").alias("last_error"),
-                    F.current_timestamp().alias("updated_at"),
-                )
-            return old.join(
-                d.drop("bucket"), on=KEY, how="full_outer"
+                # fresh store: limit(0) makes the old side a provably empty
+                # relation, and the optimizer folds a full outer join with
+                # an empty side into a projection — no join, no shuffle
+                old = spark.createDataFrame([], CHECKPOINT_SCHEMA).limit(0)
+            o, d = old.alias("o"), d.drop("bucket").alias("d")
+            return o.join(
+                d,
+                (F.col("o.url") == F.col("d.url"))
+                & (F.col("o.warc_ts") == F.col("d.warc_ts")),
+                "full_outer",
             ).select(
-                "url",
-                "warc_ts",
-                F.when(F.col("new_status").isNull(), F.col("status"))
-                .when(
-                    F.col("new_status") == STATUS_SUCCESS,
-                    F.lit(STATUS_SUCCESS),
-                )
-                .when(
-                    F.coalesce(F.col("attempts"), F.lit(0)) + 1
-                    >= F.lit(self.max_retries),
-                    F.lit(STATUS_DEAD),
-                )
-                .otherwise(F.lit(STATUS_FAILED))
-                .alias("status"),
-                (
-                    F.coalesce(F.col("attempts"), F.lit(0))
-                    + F.when(
-                        F.col("new_status").isNotNull(), F.lit(1)
-                    ).otherwise(F.lit(0))
-                )
-                .cast("int")
-                .alias("attempts"),
-                F.coalesce(F.col("new_error"), F.col("last_error")).alias(
-                    "last_error"
-                ),
-                F.when(
-                    F.col("new_status").isNotNull(), F.current_timestamp()
-                )
-                .otherwise(F.col("updated_at"))
-                .alias("updated_at"),
+                F.coalesce("o.url", "d.url").alias("url"),
+                F.coalesce("o.warc_ts", "d.warc_ts").alias("warc_ts"),
+                *transition,
             )
 
         self._merge_bucketed(delta, combine)
 
-    def all_terminal_local(self, staged_path: str) -> bool | None:
+    def _old_buckets_sql(self, con, staged_glob: str,
+                         base: dict | None) -> str | None:
+        """The touched-bucket prelude the two DuckDB paths share: a
+        ``read_parquet([...])`` over the current files of every bucket the
+        staged keys hash to, or None when no such bucket exists yet."""
+        if not base or not base["buckets"]:
+            # fresh store: no old bucket can exist, so skip the pre-scan
+            # (the first/biggest pass of every run would pay it)
+            return None
+        touched = sorted(
+            r[0]
+            for r in con.execute(
+                f"SELECT DISTINCT {_bucket_sql('url', self.n_buckets)} "
+                "FROM read_parquet(?)",
+                [staged_glob],
+            ).fetchall()
+        )
+        old_paths = self._bucket_paths(base, touched)
+        if not old_paths:
+            return None
+        globs = ", ".join(
+            sql_str(os.path.join(p, "*.parquet")) for p in old_paths
+        )
+        return f"read_parquet([{globs}])"
+
+    def all_terminal_local(self, staged_path: str) -> bool:
         """Are ALL of a staged pass dir's keys already terminal
-        (success/dead) in the checkpoint?
+        (success/dead) in the checkpoint? DuckDB, driver-side.
 
         Used by reconcile to recognize pass dirs that were merged by code
         predating the ``_MERGED`` marker: replaying those would double-count
         attempts for failed keys — and worse, a failure staged in pass K
         whose key succeeded in pass K+n would DOWNGRADE success back to
         failed. A pass whose every key is terminal can be stamped merged
-        without replaying (terminal states never transition). Returns None
-        when undeterminable (non-local store, no duckdb) — caller falls
-        back to replaying, the pre-existing documented behavior.
+        without replaying (terminal states never transition).
         """
-        if not (os.path.isdir(self.root) and os.path.isdir(staged_path)):
-            return None
-        try:
-            import duckdb
-        except ImportError:
-            return None
-        import glob as globmod
+        import duckdb
 
-        staged_glob = os.path.join(staged_path, "**", "*.parquet")
-        if not globmod.glob(staged_glob, recursive=True):
+        staged_glob = parquet_glob(staged_path)
+        if staged_glob is None:
             return True  # empty pass: vacuously merged
-        base = self._manifest()
-        if not base:
-            return False  # no checkpoint at all -> nothing is terminal
-        con = duckdb.connect()
-        try:
-            bucket_sql = (
-                f"(('0x' || substr(md5(url), 1, 15))::BIGINT "
-                f"% {self.n_buckets})::INT"
-            )
-            touched = sorted(
-                r[0]
-                for r in con.execute(
-                    f"SELECT DISTINCT {bucket_sql} FROM read_parquet(?)",
-                    [staged_glob],
-                ).fetchall()
-            )
-            old_paths = self._bucket_paths(base, touched)
-            if not old_paths:
-                return False
-            globs = ", ".join(
-                _sql_str(os.path.join(p, "*.parquet")) for p in old_paths
-            )
+        with duckdb.connect() as con:
+            old = self._old_buckets_sql(con, staged_glob, self._manifest())
+            if old is None:
+                return False  # no checkpoint row for any staged key
             n_open = con.execute(
                 f"""
                 SELECT count(*) FROM read_parquet(?) s
-                LEFT JOIN read_parquet([{globs}]) t
+                LEFT JOIN {old} t
                   ON s.url = t.url AND s.warc_ts = t.warc_ts
                 WHERE t.url IS NULL
                    OR t.status NOT IN ('{STATUS_SUCCESS}', '{STATUS_DEAD}')
                 """,
                 [staged_glob],
             ).fetchone()[0]
-            return n_open == 0
-        finally:
-            con.close()
+        return n_open == 0
 
-    def merge_results_local(self, staged_path: str,
-                            max_rows: int = LOCAL_MERGE_MAX_ROWS) -> bool:
-        """Driver-side MERGE fast path for small passes on a local fs.
+    def merge_results_local(self, staged_path: str) -> bool:
+        """The driver-side MERGE: the same ``_transition_sql`` evaluated by
+        DuckDB straight from the staged parquet, no Spark job.
 
         A retry pass of a few thousand keys costs 2-3 Spark jobs (~1-2 s of
         pure scheduling/commit latency in local mode, worse on a cluster)
-        while the merge itself is sub-second of pyarrow+pandas. This path
-        reads (url, warc_ts, error_type) straight from the staged parquet,
-        applies the EXACT transition table merge_results implements
-        relationally (tests pin the two paths equal), writes the touched
-        bucket files with pyarrow, and CAS-flips the manifest. Returns
-        False — caller falls back to the Spark path — when the store or the
-        staged dir is not a local directory or the pass exceeds
-        ``max_rows``. At 10^12 scale passes are orders of magnitude above
-        the ceiling and staged data lives on object storage, so the Spark
-        path is the one that runs.
+        while this merge is sub-second. It reads (url, warc_ts, error_type)
+        from the staged pass, rewrites only the touched bucket files, and
+        CAS-flips the manifest. The job takes this side when DuckDB is
+        installed and the pass is at most ``job.LOCAL_MERGE_MAX_ROWS``
+        rows; bigger passes, and installs without DuckDB, run the Spark
+        ``merge_results``. The job needs a local or mounted out dir either
+        way. Returns True once the pass is merged (an empty pass is a
+        no-op).
         """
-        if not (os.path.isdir(self.root) and os.path.isdir(staged_path)):
-            return False
-        try:
-            import duckdb
-        except ImportError:
-            return False  # vanilla install: the Spark merge path handles it
-        import glob as globmod
+        import duckdb
 
-        staged_glob = os.path.join(staged_path, "**", "*.parquet")
-        # explicit file probe instead of exception sniffing: an empty pass
-        # (zero data files) is a clean no-op; any real duckdb IO failure
-        # below propagates loudly rather than being mistaken for "merged"
-        if not globmod.glob(staged_glob, recursive=True):
+        staged_glob = parquet_glob(staged_path)
+        if staged_glob is None:
             return True
-        con = duckdb.connect()
-        try:
-            n_rows = con.execute(
-                "SELECT count(*) FROM read_parquet(?)", [staged_glob]
-            ).fetchone()[0]
-            if n_rows == 0:
-                return True
-            if n_rows > max_rows:
-                return False
-            base = self._manifest()
-            n_b = self.n_buckets
-            if base and base.get("buckets"):
-                # the exact duckdb twin of _bucket_col's h60(url) % B
-                bucket_sql = (
-                    f"(('0x' || substr(md5(url), 1, 15))::BIGINT"
-                    f" % {n_b})::INT"
-                )
-                touched = sorted(
-                    r[0]
-                    for r in con.execute(
-                        f"SELECT DISTINCT {bucket_sql} "
-                        f"FROM read_parquet(?)", [staged_glob]
-                    ).fetchall()
-                )
-                old_paths = self._bucket_paths(base, touched)
-            else:
-                # fresh store: no old buckets can exist, so skip the
-                # touched-bucket pre-scan — it would re-read every staged
-                # url only to look up paths in an empty mapping (the
-                # first/biggest pass of every run pays this)
-                old_paths = []
-            if old_paths:
-                globs = ", ".join(
-                    _sql_str(os.path.join(p, "*.parquet")) for p in old_paths
-                )
-                old_sql = (
-                    "SELECT url, warc_ts, status, attempts, last_error, "
-                    f"updated_at FROM read_parquet([{globs}])"
-                )
-            else:
-                old_sql = (
-                    "SELECT NULL::VARCHAR AS url, "
-                    "NULL::TIMESTAMPTZ AS warc_ts, "
-                    "NULL::VARCHAR AS status, NULL::INTEGER AS attempts, "
-                    "NULL::VARCHAR AS last_error, "
-                    "NULL::TIMESTAMPTZ AS updated_at WHERE false"
-                )
-            version = self._next_version()
-            out_dir = os.path.join(self.root, version)
-            # the same CASE chain as merge_results (keep in lockstep!)
+        base = self._manifest()
+        version = self._next_version()
+        out_dir = os.path.join(self.root, version)
+        with duckdb.connect() as con:
+            old = self._old_buckets_sql(con, staged_glob, base) or (
+                "(SELECT NULL::VARCHAR AS url, NULL::TIMESTAMPTZ AS warc_ts, "
+                "NULL::VARCHAR AS status, NULL::INTEGER AS attempts, "
+                "NULL::VARCHAR AS last_error, "
+                "NULL::TIMESTAMPTZ AS updated_at WHERE false)"
+            )
+            transition = ",\n".join(_transition_sql(self.max_retries))
             con.execute(
                 f"""
                 COPY (
-                  WITH delta AS (
-                    SELECT url, warc_ts, error_type
-                    FROM read_parquet({_sql_str(staged_glob)})
-                  ),
-                  old AS ({old_sql})
                   SELECT
                     coalesce(o.url, d.url) AS url,
                     coalesce(o.warc_ts, d.warc_ts) AS warc_ts,
-                    CASE WHEN d.url IS NULL THEN o.status
-                         WHEN d.error_type IS NULL THEN '{STATUS_SUCCESS}'
-                         WHEN coalesce(o.attempts, 0) + 1
-                              >= {self.max_retries} THEN '{STATUS_DEAD}'
-                         ELSE '{STATUS_FAILED}' END AS status,
-                    (coalesce(o.attempts, 0)
-                     + CASE WHEN d.url IS NULL THEN 0 ELSE 1 END
-                    )::INT AS attempts,
-                    coalesce(d.error_type, o.last_error) AS last_error,
-                    CASE WHEN d.url IS NULL THEN o.updated_at
-                         ELSE now() END AS updated_at,
-                    ('0x' || substr(md5(coalesce(o.url, d.url)), 1, 15)
-                    )::BIGINT % {n_b} AS bucket
-                  FROM old o
-                  FULL OUTER JOIN delta d
+                    {transition},
+                    {_bucket_sql('coalesce(o.url, d.url)', self.n_buckets)}
+                      AS bucket
+                  FROM {old} o
+                  FULL OUTER JOIN (
+                    SELECT url, warc_ts, error_type
+                    FROM read_parquet({sql_str(staged_glob)})
+                  ) d
                     ON o.url = d.url AND o.warc_ts = d.warc_ts
-                ) TO {_sql_str(out_dir)}
+                ) TO {sql_str(out_dir)}
                 (FORMAT PARQUET, PARTITION_BY (bucket),
                  OVERWRITE_OR_IGNORE true)
                 """
             )
-        finally:
-            con.close()
+        if not os.path.isdir(out_dir):
+            return True  # zero-row pass: nothing written, nothing to flip
         mapping = dict(base["buckets"]) if base else {}
         for b in self._written_buckets(version):
             mapping[b] = version
         self._flip(
-            {"n_buckets": n_b, "buckets": mapping},
-            expect=base,
+            {"n_buckets": self.n_buckets, "buckets": mapping}, expect=base
         )
         return True
 
@@ -739,15 +661,14 @@ class IcebergCheckpointStore:
         )
         self.spark.sql(merge_sql(self.table, self.max_retries))
 
-    def merge_results_local(self, staged_path: str,
-                            max_rows: int = 0) -> bool:
-        """No driver-side fast path for a remote table — always False so
-        the job falls through to the MERGE INTO."""
+    def merge_results_local(self, staged_path: str) -> bool:
+        """No driver-side MERGE for a remote table — always False; the
+        job's sink switch sends every pass to the MERGE INTO."""
         return False
 
     def all_terminal_local(self, staged_path: str) -> bool | None:
-        """Undeterminable driver-side for a remote table — reconcile falls
-        back to replaying the pass (MERGE is idempotent for success keys)."""
+        """Undeterminable driver-side for a remote table — reconcile
+        replays the pass (MERGE is idempotent for success keys)."""
         return None
 
     def mark_running(self, keys: DataFrame) -> None:

@@ -28,6 +28,7 @@ the reference's output-existence probe (reference: src/scanner.py:90-91).
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import shutil
 import time
@@ -38,8 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gemini_ocr_batch_spark.checkpoint import (
-    LOCAL_MERGE_MAX_ROWS,
     ParquetCheckpointStore,
+    parquet_glob,
+    sql_str,
 )
 from gemini_ocr_batch_spark.lineage import lineage_rows, lineage_rows_local
 from gemini_ocr_batch_spark.operators.extract import extract_pages
@@ -88,59 +90,92 @@ def _append_lineage_rows(rows, lineage_path: str, run_id: str,
 # probe (reference: src/scanner.py:90-91)
 _MERGED = "_MERGED"
 
-# driver-side sinks ceiling: small passes skip Spark-job fixed costs.
-# ONE constant shared with the checkpoint merge fast path so a pass never
-# straddles the two regimes (Spark merge but pyarrow failures, or vice
-# versa) after someone tunes one of them.
-_LOCAL_FAST_PATH_MAX_ROWS = LOCAL_MERGE_MAX_ROWS
+# the per-pass sinks' driver-side ceiling: at or below it, one DuckDB query
+# per sink beats the fixed scheduling/commit cost of the Spark jobs; above
+# it the pass is executor work. Read only by _sinks_on_driver.
+LOCAL_MERGE_MAX_ROWS = 2_000_000
+
+_HAVE_DUCKDB = importlib.util.find_spec("duckdb") is not None
 
 
-def _append_failures_local(final_path: str, failures_path: str,
-                           run_id: str, pass_num: int,
-                           attempt: int) -> None:
-    """Driver-side failures append for a small local pass: read the failure
-    columns straight from the promoted pass parquet and write one file —
-    the pyarrow twin of the Spark failures sink (same columns). Reads only
-    the is_ok=false partition dir (the pyarrow analog of the Spark path's
-    partition pruning)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as pq
+def _sinks_on_driver(store, pass_path: str) -> bool:
+    """THE switch for a pass's three sinks — lineage rows, checkpoint
+    MERGE, failure log: all run driver-side in DuckDB, or all run as
+    Spark jobs. Decided once per pass (and per orphan pass in reconcile).
 
-    bad_dir = os.path.join(final_path, "is_ok=false")
-    if not os.path.isdir(bad_dir):
+    Driver side iff DuckDB is installed, the store is the Parquet one (the
+    Iceberg MERGE INTO is Spark-only) and the staged pass has at most
+    ``LOCAL_MERGE_MAX_ROWS`` rows — a DuckDB ``count(*)`` that reads only
+    the parquet footers. Measured on pipeline_mixed (4 cores), the Spark
+    side costs 23 more Spark jobs and 5-6 s more per run; it stays for
+    passes too big for one driver, the Iceberg store and installs without
+    DuckDB.
+    """
+    if not (_HAVE_DUCKDB and isinstance(store, ParquetCheckpointStore)):
+        return False
+    staged_glob = parquet_glob(pass_path)
+    if staged_glob is None:
+        return True  # empty pass: no sink has anything to read
+    import duckdb
+
+    with duckdb.connect() as con:
+        (n_rows,) = con.execute(
+            "SELECT count(*) FROM read_parquet(?)", [staged_glob]
+        ).fetchone()
+    return n_rows <= LOCAL_MERGE_MAX_ROWS
+
+
+def _read_staged(spark: SparkSession, pass_path: str) -> DataFrame:
+    return spark.read.schema(STAGED_SCHEMA).parquet(pass_path)
+
+
+def _merge_pass(spark: SparkSession, store, pass_path: str,
+                on_driver: bool) -> None:
+    """Checkpoint MERGE of a promoted pass; reads only the 3 key/status
+    columns."""
+    if on_driver:
+        store.merge_results_local(pass_path)
+    else:
+        store.merge_results(
+            _read_staged(spark, pass_path).select(
+                "url", "warc_ts", "error_type"
+            )
+        )
+
+
+def _append_failures(spark: SparkSession, pass_path: str,
+                     failures_path: str, run_id: str, pass_num: int,
+                     attempt: int, on_driver: bool) -> None:
+    """Append a pass's failure rows to the failure log. Both sides read
+    only the is_ok=false partition and write the same columns."""
+    if not on_driver:
+        _read_staged(spark, pass_path).filter(~F.col("is_ok")).select(
+            "url",
+            "warc_ts",
+            "error_type",
+            "error_message",
+            "input_sample",
+            F.lit(attempt).cast("int").alias("attempts"),
+            F.lit(run_id).alias("run_id"),
+            F.current_timestamp().alias("created_at"),
+        ).coalesce(8).write.mode("append").parquet(failures_path)
         return
-    tbl = pads.dataset(bad_dir, format="parquet").to_table(
-        columns=["url", "warc_ts", "error_type", "error_message",
-                 "input_sample"]
-    )
-    tbl = tbl.filter(pc.is_valid(tbl.column("error_type")))
-    if tbl.num_rows == 0:
-        return
-    import datetime as dt
+    import duckdb
 
-    n = tbl.num_rows
-    now = dt.datetime.now(dt.timezone.utc)
-    ts_type = pa.timestamp("us", tz="UTC")
-    out = pa.table(
-        {
-            "url": tbl.column("url"),
-            # defensive: INT96-written inputs read as naive ns — normalize
-            "warc_ts": tbl.column("warc_ts").cast(ts_type),
-            "error_type": tbl.column("error_type"),
-            "error_message": tbl.column("error_message"),
-            "input_sample": tbl.column("input_sample"),
-            "attempts": pa.array([attempt] * n, pa.int32()),
-            "run_id": pa.array([run_id] * n, pa.string()),
-            "created_at": pa.array([now] * n, pa.timestamp("us", tz="UTC")),
-        }
-    )
     os.makedirs(failures_path, exist_ok=True)
-    pq.write_table(
-        out,
-        os.path.join(failures_path, f"part-{run_id}-{pass_num}.parquet"),
-    )
+    bad = os.path.join(pass_path, "is_ok=false", "*.parquet")
+    out = os.path.join(failures_path, f"part-{run_id}-{pass_num}.parquet")
+    with duckdb.connect() as con:
+        con.execute(
+            f"""
+            COPY (
+              SELECT url, warc_ts, error_type, error_message, input_sample,
+                     {int(attempt)}::INTEGER AS attempts,
+                     {sql_str(run_id)} AS run_id, now() AS created_at
+              FROM read_parquet({sql_str(bad)})
+            ) TO {sql_str(out)} (FORMAT PARQUET)
+            """
+        )
 
 
 def _touch(path: str) -> None:
@@ -167,7 +202,9 @@ def _reconcile_orphans(
     terminal in the checkpoint is stamped without replaying — replaying
     would double-count attempts and could downgrade a later success back
     to failed. Only passes with open (non-terminal/absent) keys — the
-    genuine crash-window shape — are merged.
+    genuine crash-window shape — are merged. Each orphan pass goes through
+    the same sink switch as a live one; the terminal-key probe is
+    DuckDB's, so on the Spark side the pass is always replayed.
     """
     n = 0
     if not os.path.isdir(all_path):
@@ -193,14 +230,11 @@ def _reconcile_orphans(
                 continue
             if os.path.exists(os.path.join(pass_path, _MERGED)):
                 continue
-            if store.all_terminal_local(pass_path):
+            on_driver = _sinks_on_driver(store, pass_path)
+            if on_driver and store.all_terminal_local(pass_path):
                 _touch(os.path.join(pass_path, _MERGED))
                 continue
-            if not store.merge_results_local(pass_path):
-                staged = spark.read.schema(STAGED_SCHEMA).parquet(pass_path)
-                store.merge_results(
-                    staged.select("url", "warc_ts", "error_type")
-                )
+            _merge_pass(spark, store, pass_path, on_driver)
             _touch(os.path.join(pass_path, _MERGED))
             n += 1
     return n
@@ -312,19 +346,15 @@ def run_extraction_job(
         )
         t_ph = result._phase("extract_write", t_ph)
         # --- cheap derived work over the pass we just wrote ---
-        # one tiny aggregate gives lineage rows AND the pass accounting.
-        # Driver-side (pyarrow) when the staged dir is a local fs — each
-        # avoided Spark job saves ~0.5 s of fixed scheduling/commit latency
-        # per pass; on a cluster (object storage) the Spark path runs.
-        local_fs = os.path.isdir(tmp_path)
-        lin_rows = (
-            lineage_rows_local(tmp_path, run_id, pass_num)
-            if local_fs
-            else None
-        )
-        if lin_rows is None:  # remote fs, or pass too big for one driver
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(tmp_path)
-            lin_rows = lineage_rows(staged, run_id, pass_num).collect()
+        # one switch puts all three sinks on the driver or on Spark; one
+        # tiny aggregate gives lineage rows AND the pass accounting
+        on_driver = _sinks_on_driver(store, tmp_path)
+        if on_driver:
+            lin_rows = lineage_rows_local(tmp_path, run_id, pass_num)
+        else:
+            lin_rows = lineage_rows(
+                _read_staged(spark, tmp_path), run_id, pass_num
+            ).collect()
         n_total = sum(int(r["row_count"]) for r in lin_rows)
         n_bad = sum(int(r["failure_count"]) for r in lin_rows)
         t_ph = result._phase("lineage", t_ph)
@@ -332,42 +362,23 @@ def run_extraction_job(
             # empty frontier — the job is complete; nothing to promote
             shutil.rmtree(tmp_path, ignore_errors=True)
             break
-        if lin_rows:
-            _append_lineage_rows(lin_rows, lineage_path, run_id, pass_num)
+        _append_lineage_rows(lin_rows, lineage_path, run_id, pass_num)
         # promote: atomic rename into the readable layout. Pass dirs are
         # immutable once promoted (base_pass skips existing ones; reconcile
         # merged any unmarked ones), so the target cannot exist — os.rename
         # fails loudly rather than ever replacing extracted data.
         os.makedirs(os.path.dirname(final_path), exist_ok=True)
         os.rename(tmp_path, final_path)
-        # checkpoint MERGE reads only the 3 key/status columns; driver-side
-        # fast path for small local passes, Spark MERGE otherwise
-        if not store.merge_results_local(final_path):
-            staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
-            store.merge_results(staged.select("url", "warc_ts", "error_type"))
+        _merge_pass(spark, store, final_path, on_driver)
         _touch(os.path.join(final_path, _MERGED))
         t_ph = result._phase("merge", t_ph)
         if n_bad:
             # attempt index within THIS run (pass_num is offset by
             # base_pass on fixed-run_id reruns)
-            attempt = pass_num - base_pass + 1
-            if local_fs and n_total <= _LOCAL_FAST_PATH_MAX_ROWS:
-                _append_failures_local(
-                    final_path, failures_path, run_id, pass_num, attempt
-                )
-            else:
-                # failure log: partition-pruned (is_ok=false) + column-pruned
-                staged = spark.read.schema(STAGED_SCHEMA).parquet(final_path)
-                staged.filter(~F.col("is_ok")).select(
-                    "url",
-                    "warc_ts",
-                    "error_type",
-                    "error_message",
-                    "input_sample",
-                    F.lit(attempt).cast("int").alias("attempts"),
-                    F.lit(run_id).alias("run_id"),
-                    F.current_timestamp().alias("created_at"),
-                ).coalesce(8).write.mode("append").parquet(failures_path)
+            _append_failures(
+                spark, final_path, failures_path, run_id, pass_num,
+                pass_num - base_pass + 1, on_driver,
+            )
             t_ph = result._phase("failures", t_ph)
         result.passes += 1
         result.extracted_rows += n_total

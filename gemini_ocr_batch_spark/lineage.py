@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemini_ocr_batch_spark import EXTRACTOR_VERSION
+from gemini_ocr_batch_spark.checkpoint import parquet_glob
 
 
 def lineage_rows(extracted: DataFrame, run_id: str, pass_num: int) -> DataFrame:
@@ -48,72 +49,45 @@ def lineage_rows(extracted: DataFrame, run_id: str, pass_num: int) -> DataFrame:
     )
 
 
-def lineage_rows_local(staged_path: str, run_id: str, pass_num: int,
-                       max_rows: int = 50_000_000) -> list[dict] | None:
-    """Driver-side twin of :func:`lineage_rows` over a LOCAL staged dir.
+def lineage_rows_local(staged_path: str, run_id: str,
+                       pass_num: int) -> list[dict]:
+    """Driver-side twin of :func:`lineage_rows` over a staged pass dir.
 
     A pass's telemetry columns (partition_id, error_type, bytes_in,
-    kernel_ns) are a few MB even at bench scale; aggregating them with
-    pyarrow+pandas replaces one whole Spark job of fixed scheduling/commit
-    latency per pass. Returns plain dicts consumable by the same pyarrow
-    lineage appender, or None above ``max_rows`` (caller falls back to the
-    distributed aggregation). Tests pin this equal to the Spark path.
+    kernel_ns) are a few MB even at bench scale; one DuckDB ``GROUP BY``
+    over them replaces a whole Spark job of fixed scheduling latency per
+    pass. Returns plain dicts for the same lineage appender the Spark
+    side's collected rows go to. ``test_spark_and_driver_sinks_agree``
+    pins the two sides equal through the job.
     """
-    import pyarrow.dataset as pads
+    import duckdb
 
-    ds = pads.dataset(staged_path, format="parquet", partitioning="hive")
-    if "partition_id" not in ds.schema.names:
+    staged_glob = parquet_glob(staged_path)
+    if staged_glob is None:
         return []  # empty pass: zero data files were written
-    if ds.count_rows() > max_rows:
-        return None  # too big for one driver: use the Spark aggregation
-    # Only the three int64 telemetry columns are read from data pages; the
-    # failure count comes from the hive `is_ok` partition field (free —
-    # decoded from directory names), so the error_type STRING column never
-    # leaves disk. Aggregation is pyarrow-native (C++), no pandas layer.
-    tbl = ds.to_table(
-        columns=["partition_id", "bytes_in", "kernel_ns", "is_ok"]
-    )
-    if tbl.num_rows == 0:
-        return []
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    bad = pc.if_else(
-        pc.equal(tbl.column("is_ok").cast(pa.string()), "false"),
-        pa.scalar(1, pa.int64()),
-        pa.scalar(0, pa.int64()),
-    )
-    tbl = tbl.drop_columns(["is_ok"]).append_column("is_bad", bad)
-    agg = (
-        pa.TableGroupBy(tbl, "partition_id")
-        .aggregate(
-            [
-                ("partition_id", "count"),
-                ("is_bad", "sum"),
-                ("bytes_in", "sum"),
-                ("kernel_ns", "sum"),
-            ]
-        )
-        .sort_by("partition_id")
-    )
+    with duckdb.connect() as con:
+        agg = con.execute(
+            """
+            SELECT partition_id, count(*)::BIGINT, count(error_type)::BIGINT,
+                   sum(bytes_in)::BIGINT, sum(kernel_ns)::DOUBLE / 1e6
+            FROM read_parquet(?)
+            GROUP BY partition_id ORDER BY partition_id
+            """,
+            [staged_glob],
+        ).fetchall()
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    rows = []
-    for rec in agg.to_pylist():
-        n = int(rec["partition_id_count"])
-        n_bad = int(rec["is_bad_sum"])
-        rows.append(
-            {
-                "run_id": run_id,
-                "pass_num": int(pass_num),
-                "partition_id": int(rec["partition_id"]),
-                "row_count": n,
-                "success_count": n - n_bad,
-                "failure_count": n_bad,
-                "bytes_in": int(rec["bytes_in_sum"]),
-                "kernel_wall_ms": float(rec["kernel_ns_sum"]) / 1e6,
-                "extractor_version": EXTRACTOR_VERSION,
-                "started_at": now,
-            }
-        )
-    return rows
-
+    return [
+        {
+            "run_id": run_id,
+            "pass_num": int(pass_num),
+            "partition_id": partition_id,
+            "row_count": n,
+            "success_count": n - n_bad,
+            "failure_count": n_bad,
+            "bytes_in": bytes_in,
+            "kernel_wall_ms": kernel_wall_ms,
+            "extractor_version": EXTRACTOR_VERSION,
+            "started_at": now,
+        }
+        for partition_id, n, n_bad, bytes_in, kernel_wall_ms in agg
+    ]

@@ -399,7 +399,8 @@ def cli_calls(monkeypatch, tmp_path):
         calls["extract"] = args
         return types.SimpleNamespace(passes=1, extracted_rows=0,
                                      success_rows=0, failed_rows=0,
-                                     wall_sec=0.0, docs_per_sec=0.0)
+                                     wall_sec=0.0, docs_per_sec=0.0,
+                                     phase_secs={})
 
     class Store:
         def __init__(self, path):

@@ -23,6 +23,7 @@ from gemini_ocr_batch_spark.checkpoint import (
     CheckpointConflict,
     ParquetCheckpointStore,
 )
+from gemini_ocr_batch_spark import job
 from gemini_ocr_batch_spark.job import read_extracted, run_extraction_job
 from gemini_ocr_batch_spark.schemas import PAGES_SCHEMA
 
@@ -89,10 +90,17 @@ def test_fixed_run_id_rerun_continues_pass_numbering(spark, tmp_path):
     assert spark.read.parquet(pass0).count() == 20
 
 
-def test_crash_between_promote_and_merge_reconciles(spark, tmp_path):
+@pytest.mark.parametrize(
+    "cap", [job.LOCAL_MERGE_MAX_ROWS, 0], ids=["driver", "spark"]
+)
+def test_crash_between_promote_and_merge_reconciles(spark, tmp_path,
+                                                    monkeypatch, cap):
     """Simulated driver death after the pass dir was promoted but before the
     checkpoint MERGE: the next job folds the orphan pass into the
-    checkpoint, so nothing is re-extracted and no key is duplicated."""
+    checkpoint, so nothing is re-extracted and no key is duplicated — by
+    the driver-side MERGE under the default cap, by the Spark MERGE at
+    cap 0."""
+    monkeypatch.setattr(job, "LOCAL_MERGE_MAX_ROWS", cap)
     out = str(tmp_path / "out")
     pages = _good_pages(spark)
     run_extraction_job(spark, pages, out, run_id="runA")
@@ -110,6 +118,50 @@ def test_crash_between_promote_and_merge_reconciles(spark, tmp_path):
     # and the orphaned run dir for runB holds no pass output at all
     run_b = os.path.join(out, "extracted_all", "run_id=runB")
     assert not os.path.isdir(run_b) or os.listdir(run_b) == []
+
+
+def test_spark_and_driver_sinks_agree(spark, tmp_path, monkeypatch):
+    """The per-pass sink switch: the same job run with all three sinks on
+    the driver (DuckDB) and, at cap 0, all three as Spark jobs leaves the
+    same checkpoint, lineage rows and failure rows, read back by Spark
+    under the same schemas. Passes carry failures and dead keys."""
+    def run(out):
+        run_extraction_job(spark, _mixed_pages(spark), out, run_id="r",
+                           max_retries=2)
+        ckpt = sorted(
+            (r["url"], r["status"], r["attempts"], r["last_error"])
+            for r in ParquetCheckpointStore(
+                os.path.join(out, "checkpoint")
+            ).read(spark).collect()
+        )
+        lineage = spark.read.parquet(os.path.join(out, "lineage"))
+        failures = spark.read.parquet(os.path.join(out, "failures"))
+        # started_at/created_at are wall clocks; kernel_wall_ms is a timing
+        lin_cols = [c for c in lineage.columns
+                    if c not in ("started_at", "kernel_wall_ms")]
+        fail_cols = [c for c in failures.columns if c != "created_at"]
+        return (
+            ckpt,
+            sorted(tuple(r) for r in lineage.select(*lin_cols).collect()),
+            sorted(tuple(r) for r in failures.select(*fail_cols).collect()),
+            lineage.schema,
+            failures.schema,
+        )
+
+    driver = run(str(tmp_path / "driver"))
+    monkeypatch.setattr(job, "LOCAL_MERGE_MAX_ROWS", 0)
+    spark_side = run(str(tmp_path / "spark"))
+    assert any(status == "dead" for _u, status, _a, _e in driver[0])
+    assert len(driver[2]) == 8  # 4 bad keys x 2 passes
+    # each side really ran: the DuckDB failure sink names its file after
+    # the run and pass, the Spark one writes Spark part files
+    assert "part-r-0.parquet" in os.listdir(tmp_path / "driver" / "failures")
+    assert not any(
+        f.startswith("part-r-")
+        for f in os.listdir(tmp_path / "spark" / "failures")
+    )
+    for got, want in zip(spark_side, driver):
+        assert got == want
 
 
 def test_upgrade_from_premarker_passes_stamps_without_remerge(spark, tmp_path):
@@ -256,7 +308,7 @@ def test_bucket_pruned_merge_touches_only_delta_buckets(spark, tmp_path):
 
 
 def test_local_and_spark_merge_paths_agree(spark, tmp_path):
-    """merge_results_local (driver-side pyarrow) must produce exactly the
+    """merge_results_local (driver-side DuckDB) must produce exactly the
     same checkpoint state as merge_results (Spark) for the same passes —
     including retry/dead-letter transitions across multiple merges."""
     from gemini_ocr_batch_spark.schemas import EXTRACTED_SCHEMA
@@ -312,7 +364,7 @@ def test_local_and_spark_merge_paths_agree(spark, tmp_path):
     assert sl["https://b/bad2"] == ("success", 2, "DecodeError")
     assert sl["https://a/bad1"] == ("dead", 3, "KernelError")
     # and the two stores interoperate: a Spark merge on top of a
-    # pyarrow-written snapshot (mixed-writer files must read identically)
+    # DuckDB-written snapshot (mixed-writer files must read identically)
     extra = spark.createDataFrame(
         [("https://c/new", _TS, None)],
         "url string, warc_ts timestamp, error_type string",

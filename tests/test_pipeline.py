@@ -321,6 +321,9 @@ sharding:
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert set(rep) == {"extract", "curate", "decontaminate", "shard"}
     assert rep["extract"]["success_rows"] > 0
+    assert {"extract_write", "lineage", "merge"} <= set(
+        rep["extract"]["phase_secs"]
+    )
     assert rep["curate"]["input_rows"] == rep["extract"]["success_rows"]
     assert rep["shard"]["shards"] == 4
     assert rep["shard"]["docs"] == rep["curate"]["kept"]
